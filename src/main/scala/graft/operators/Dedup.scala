@@ -253,13 +253,35 @@ object Dedup {
       ex: DataFrame, cands: DataFrame,
       threshold: Double, maxDf: Int,
       precomputedSizes: Option[DataFrame] = None,
-      precomputedKeep: Option[DataFrame] = None,
       maxArraySz: Long = maxArrayDocShingles): DataFrame = {
     // (doc_id, sz): either ride-along output of the signature groupBy
     // (already materialized — zero extra jobs) or a dedicated aggregate
     val sizes = precomputedSizes.getOrElse(
       ex.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
         .materializeOnce()) // read by the bound filter AND the final select
+    val sized = cands
+      .join(sizes.select(col("doc_id").as("id_a"), col("sz").as("sz_a")), Seq("id_a"))
+      .join(sizes.select(col("doc_id").as("id_b"), col("sz").as("sz_b")), Seq("id_b"))
+    // `keep` is the surviving (df ≤ cap) shingle set — a CORPUS-WIDE
+    // count (dedupBatchAgainstStore merges a persisted one instead)
+    val keep = ex.groupBy(col("sh")).agg(count(lit(1)).as("df"))
+      .filter(col("df") <= maxDf).select(col("sh"))
+    verifySized(ex, sized, keep, threshold, maxArraySz)
+      .orderBy(col("id_a"), col("id_b"))
+  }
+
+  /** The verification core over candidate pairs that already carry
+    * their set sizes: `sized` is (id_a, id_b, sz_a, sz_b) plus any
+    * pass-through columns, which ride to the (unordered) output next to
+    * `jaccard`. `broadcastIds` ships the candidate-doc id set to the
+    * `ex` scan as a broadcast semi-join, so `ex` is filtered map-side
+    * and never shuffled — right when the candidate set is batch-sized
+    * and `ex` is a whole store index (dedupBatchAgainstStore); a
+    * corpus-wide self-dedup leaves the join choice to the planner. */
+  private def verifySized(
+      ex: DataFrame, sized: DataFrame, keep: DataFrame,
+      threshold: Double, maxArraySz: Long,
+      broadcastIds: Boolean = false): DataFrame = {
     // Length bound (AllPairs/PPJoin): J = |∩|/|∪| ≤ min(sz)/max(sz), so
     // any pair whose size ratio is below the threshold provably cannot
     // verify — prune it BEFORE paying |cands|·shingles join rows. Pure
@@ -268,9 +290,7 @@ object Dedup {
     // The max doc size over surviving pairs rides the checkpoint as an
     // Observation metric — it picks the verification shape below.
     val obs = org.apache.spark.sql.Observation()
-    val bounded = cands
-      .join(sizes.select(col("doc_id").as("id_a"), col("sz").as("sz_a")), Seq("id_a"))
-      .join(sizes.select(col("doc_id").as("id_b"), col("sz").as("sz_b")), Seq("id_b"))
+    val bounded = sized
       .filter(least(col("sz_a"), col("sz_b")).cast("double") /
         greatest(col("sz_a"), col("sz_b")) >= threshold)
       .observe(obs, max(greatest(col("sz_a"), col("sz_b"))).as("mx"))
@@ -280,12 +300,6 @@ object Dedup {
     val maxSz = Option(obs.get("mx"))
       .map(_.asInstanceOf[Number].longValue).getOrElse(0L)
     VerifySplitProbe.record(maxSz, maxArraySz)
-    // `keep` is the surviving (df ≤ cap) shingle set. The df count is a
-    // CORPUS-WIDE property; callers with a persisted index pass it in
-    // (precomputedKeep) instead of paying the full-corpus aggregate here.
-    val keep = precomputedKeep.getOrElse(
-      ex.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-        .filter(col("df") <= maxDf).select(col("sh")))
     // Each candidate doc's CAPPED shingle set travels as ONE array row
     // and |A∩B| is computed per pair IN-TASK by array_intersect — the
     // prefixJaccardJoin verification shape. The exploded form joined
@@ -303,15 +317,16 @@ object Dedup {
     // through the exploded join instead: same exact intersection, no
     // multi-MB array row (rule: both shapes are exact, the split is
     // performance-only).
-    val inter = splitVerifiedInter(ex, bounded, keep, maxSz, maxArraySz)
-    inter
-      .select(col("id_a"), col("id_b"),
+    val extra = sized.columns.toSeq
+      .filterNot(Set("id_a", "id_b", "sz_a", "sz_b")).map(col)
+    splitVerifiedInter(ex, bounded, keep, maxSz, maxArraySz, broadcastIds)
+      .select(Seq(col("id_a"), col("id_b"),
         (col("inter") / (col("sz_a") + col("sz_b") - col("inter"))).as("jaccard"))
+        ++ extra: _*)
       .filter(col("jaccard") >= threshold)
-      .orderBy(col("id_a"), col("id_b"))
   }
 
-  /** (id_a, id_b, sz_a, sz_b, inter ≥ 1) for every bounded candidate
+  /** (pair columns…, inter ≥ 1) for every bounded candidate
     * pair — array-set verification for pairs of small docs, exploded
     * join for pairs touching a doc above `maxArraySz`. Both shapes
     * compute the exact df-capped |A∩B| (ex is distinct per doc), so the
@@ -320,37 +335,36 @@ object Dedup {
     * says no big docs exist, the plan is exactly the pure array shape. */
   private def splitVerifiedInter(
       ex: DataFrame, bounded: DataFrame, keep: DataFrame,
-      maxSz: Long, maxArraySz: Long): DataFrame = {
-    def arrayInter(pairs: DataFrame): DataFrame = {
-      val candIds = pairs.select(col("id_a").as("doc_id"))
+      maxSz: Long, maxArraySz: Long, broadcastIds: Boolean): DataFrame = {
+    val pairCols = bounded.columns.toSeq.map(col)
+    // the candidate docs' df-capped (doc_id, sh) rows
+    def candShingles(pairs: DataFrame): DataFrame = {
+      val ids = pairs.select(col("id_a").as("doc_id"))
         .union(pairs.select(col("id_b").as("doc_id")))
         .distinct()
-      val docSets = ex.join(candIds, Seq("doc_id"), "left_semi")
+      ex.join(if (broadcastIds) broadcast(ids) else ids, Seq("doc_id"), "left_semi")
         .join(keep, Seq("sh"), "left_semi")
+    }
+    def arrayInter(pairs: DataFrame): DataFrame = {
+      val docSets = candShingles(pairs)
         .groupBy(col("doc_id")).agg(collect_list(col("sh")).as("shs"))
       pairs
         .join(docSets.select(col("doc_id").as("id_a"), col("shs").as("shs_a")),
           Seq("id_a"))
         .join(docSets.select(col("doc_id").as("id_b"), col("shs").as("shs_b")),
           Seq("id_b"))
-        .select(col("id_a"), col("id_b"), col("sz_a"), col("sz_b"),
-          size(array_intersect(col("shs_a"), col("shs_b"))).cast("long").as("inter"))
+        .select(pairCols :+
+          size(array_intersect(col("shs_a"), col("shs_b"))).cast("long").as("inter"): _*)
         .filter(col("inter") >= 1)
     }
     def explodedInter(pairs: DataFrame): DataFrame = {
-      val ids = pairs.select(col("id_a").as("doc_id"))
-        .union(pairs.select(col("id_b").as("doc_id")))
-        .distinct()
-      val exBig = ex.join(ids, Seq("doc_id"), "left_semi")
-        .join(keep, Seq("sh"), "left_semi")
+      val exBig = candShingles(pairs)
       pairs
         .join(exBig.select(col("doc_id").as("id_a"), col("sh")), Seq("id_a"))
         .join(exBig.select(col("doc_id").as("id_b"), col("sh")),
           Seq("id_b", "sh"))
-        .groupBy(col("id_a"), col("id_b"), col("sz_a"), col("sz_b"))
+        .groupBy(pairCols: _*)
         .agg(count(lit(1)).as("inter"))
-        .select(col("id_a"), col("id_b"), col("sz_a"), col("sz_b"),
-          col("inter"))
     }
     if (maxSz <= maxArraySz) arrayInter(bounded)
     else {
@@ -1107,42 +1121,44 @@ object Dedup {
   def incrementalDedup(
       docs: DataFrame, isBatch: Column,
       threshold: Double = 0.5, maxDf: Int = 100): DataFrame = {
+    val flags = docs.select(col("doc_id"), isBatch.as("is_batch"))
+      .materializeOnce() // read by both pair-side joins AND the batch ids
     val pairs = minhashVerifiedPairs(docs, threshold, maxDf = maxDf)
       .select(col("id_a"), col("id_b"))
-    val flags = docs.select(col("doc_id"), isBatch.as("is_batch"))
-    classifyBatchPairs(pairs, flags)
-  }
-
-  /** Shared keep/drop classification over verified near-dup pairs
-    * (id_a < id_b) given a (doc_id, is_batch) flag table: corpus_dup >
-    * batch_dup > unique, batch rows only. Used by both the recompute
-    * path (incrementalDedup) and the persisted-store path
-    * (dedupBatchAgainstStore) so the two cannot drift. */
-  private def classifyBatchPairs(pairs: DataFrame, flagsIn: DataFrame): DataFrame = {
-    val flags = flagsIn.materializeOnce() // read by three join branches below
-    val pf = pairs
       .join(flags.select(col("doc_id").as("id_a"), col("is_batch").as("a_batch")),
         Seq("id_a"))
       .join(flags.select(col("doc_id").as("id_b"), col("is_batch").as("b_batch")),
         Seq("id_b"))
-      .materializeOnce() // shared by the two dup-id branches
-    // batch docs duplicating a corpus doc (either pair direction)
-    val corpusDup = pf.filter(col("a_batch") && !col("b_batch"))
-      .select(col("id_a").as("doc_id"))
-      .union(pf.filter(col("b_batch") && !col("a_batch"))
-        .select(col("id_b").as("doc_id")))
-      .distinct().withColumn("corpus_dup", lit(true))
-    // batch docs duplicating an EARLIER batch doc (pairs carry id_a < id_b)
-    val batchDup = pf.filter(col("a_batch") && col("b_batch"))
-      .select(col("id_b").as("doc_id"))
-      .distinct().withColumn("batch_dup", lit(true))
-    flags.filter(col("is_batch")).select(col("doc_id"))
-      .join(corpusDup, Seq("doc_id"), "left")
-      .join(batchDup, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        (col("corpus_dup").isNull && col("batch_dup").isNull).as("keep"),
-        when(col("corpus_dup").isNotNull, "corpus_dup")
-          .when(col("batch_dup").isNotNull, "batch_dup")
+    classifyBatchPairs(pairs, flags.filter(col("is_batch")).select(col("doc_id")))
+  }
+
+  /** Shared keep/drop classification over verified near-dup pairs
+    * (id_a < id_b, each side flagged a_batch / b_batch): corpus_dup >
+    * batch_dup > unique, one row per id of `batchIds` (doc ids are
+    * unique). Used by both the recompute path (incrementalDedup) and
+    * the persisted-store path (dedupBatchAgainstStore) so the two
+    * cannot drift. One pass: every pair names at most two batch docs
+    * with a reason rank (0 = corpus_dup: paired with a corpus doc;
+    * 1 = batch_dup: the later doc of a batch-batch pair), one groupBy
+    * keeps each doc's minimum rank, and a left join from `batchIds`
+    * decides every batch doc — including one with no shingles (empty
+    * or null text), which no pair can name and which is 'unique'. */
+  private def classifyBatchPairs(pairs: DataFrame, batchIds: DataFrame): DataFrame = {
+    def hit(id: String, rank: Column) =
+      struct(col(id).as("doc_id"), rank.as("rank"))
+    val ranks = pairs
+      .select(explode(array(
+        when(col("a_batch") && !col("b_batch"), hit("id_a", lit(0))),
+        when(col("b_batch"), hit("id_b", when(col("a_batch"), 1).otherwise(0)))))
+        .as("h"))
+      .filter(col("h").isNotNull)
+      .groupBy(col("h.doc_id").as("doc_id"))
+      .agg(min(col("h.rank")).as("rank"))
+    batchIds
+      .join(ranks, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("rank").isNull.as("keep"),
+        when(col("rank") === 0, "corpus_dup")
+          .when(col("rank") === 1, "batch_dup")
           .otherwise("unique").as("reason"))
       .orderBy(col("doc_id"))
   }
@@ -1201,7 +1217,10 @@ object Dedup {
   private def writeStoreTables(exRaw: DataFrame, k: Int, path: String,
       sub: String, mode: String): Unit = {
     val obs = org.apache.spark.sql.Observation()
-    val ex = exRaw.observe(obs,
+    // doc_id as bigint whatever the input's integral type: readers use
+    // the fixed schemas below
+    val ex = exRaw.select(col("doc_id").cast("long").as("doc_id"), col("sh"))
+      .observe(obs,
         count(lit(1)).as("n_sh"),
         approx_count_distinct(col("doc_id")).as("n_docs"),
         approx_count_distinct(col("sh")).as("n_distinct"))
@@ -1217,6 +1236,20 @@ object Dedup {
       .write.mode(mode).parquet(s"$path/df$sub")
   }
 
+  /** The store tables' schemas, fixed by writeStoreTables: readers pass
+    * them to the parquet source instead of paying a schema-inference
+    * job per table per batch. */
+  private[graft] object StoreSchema {
+    import org.apache.spark.sql.types._
+    val signatures: StructType = StructType(Seq(
+      StructField("doc_id", LongType), StructField("sz", LongType),
+      StructField("sig", ArrayType(LongType))))
+    val shingles: StructType = StructType(Seq(
+      StructField("doc_id", LongType), StructField("sh", LongType)))
+    val df: StructType = StructType(Seq(
+      StructField("sh", LongType), StructField("df", LongType)))
+  }
+
   /** Dedup an incoming batch against a PERSISTED signature store — the
     * actual at-scale incremental pattern: the settled corpus is touched
     * only through its index (signatures for candidates, merged df for
@@ -1224,15 +1257,22 @@ object Dedup {
     * text is never read and corpus signatures are never recomputed.
     *
     * Output and semantics are IDENTICAL to incrementalDedup over
-    * (corpus ∪ batch): the candidate band join sees the same banded
-    * signature population (store ∪ batch, same capBuckets contract), the
-    * verify stage's df cap is the same corpus-wide count (persisted df +
-    * batch increment), and classification reuses the same helper —
+    * (corpus ∪ batch): the candidate band join sees every bucket a batch
+    * doc lands in at its full (store ∪ batch) population, so the
+    * capBuckets decision and the candidates are the recompute path's;
+    * the verify stage's df cap is the same corpus-wide count (persisted
+    * df + batch increment), and classification reuses the same helper —
     * SignatureStoreSpec asserts row-for-row equality and the d53 gate
     * replays it against the brute-force oracle (rule-13 recall
-    * contract, tools.RecallCheck). Per-batch cost: O(batch shingles) +
-    * the band join + candidate-doc index reads — independent of corpus
-    * text size. */
+    * contract, tools.RecallCheck).
+    *
+    * Per-batch cost: O(batch shingles), one scan of the store's
+    * signatures (band keys and sizes), a band join over the batch's
+    * bucket neighbourhood only, a map-side (broadcast) filter of the
+    * store's shingle index down to candidate docs — the index itself is
+    * never shuffled — and one aggregate over the df table, whose size
+    * is the corpus's distinct-shingle count. Corpus text size does not
+    * enter. SignatureStoreSpec pins the plan shape and the job count. */
   def dedupBatchAgainstStore(
       batch: DataFrame, storeSigs: DataFrame, storeShingles: DataFrame,
       storeDf: DataFrame, threshold: Double = 0.5, k: Int = 16,
@@ -1243,61 +1283,71 @@ object Dedup {
     // verification shingles (same sharing as minhashVerifiedPairs)
     val bex = shingleHashTable(batch, shingleN).materializeOnce()
     val bsigs = signaturesFromShingles(bex, k)
-      .materializeOnce() // banded join + sizes + flags all read it
+      .materializeOnce() // banded twice: the neighbourhood keys and its own rows
+    val keys = Seq("band", "band_hash")
     def banded(sigs: DataFrame, isBatch: Boolean) =
-      sigs.select(col("doc_id"), lit(isBatch).as("is_batch"),
+      sigs.select(col("doc_id"), col("sz"), lit(isBatch).as("is_batch"),
         posexplode(array((0 until bands).map(b =>
           xxhash64(slice(col("sig"), b * rows + 1, rows))): _*))
           .as(Seq("band", "band_hash")))
-    // cap over the COMBINED banded population (store ∪ batch) — bucket
-    // sizes, and therefore the cap decision, match the recompute path
-    val allBanded = capBuckets(
-      banded(storeSigs.select(col("doc_id"), col("sig")), isBatch = false)
-        .unionByName(banded(bsigs.select(col("doc_id"), col("sig")), isBatch = true)),
-      Seq("band", "band_hash"), maxBucket)
-    // candidates TOUCHING THE BATCH only: batch side × everything. The
+    val bBanded = banded(bsigs, isBatch = true)
+    // the batch's neighbourhood: store rows in a bucket that holds a
+    // batch doc. Every such bucket keeps its full store ∪ batch
+    // population, so its count — and the cap decision — match the
+    // recompute path; buckets without a batch doc yield no candidate
+    // touching the batch and are never materialized
+    val hood = capBuckets(
+      banded(storeSigs, isBatch = false)
+        .join(broadcast(bBanded.select(keys.map(col): _*)), keys, "left_semi")
+        .unionByName(bBanded),
+      keys, maxBucket)
+    // candidates TOUCHING THE BATCH only: batch side × neighbourhood. The
     // corpus×corpus quadrant — the one that dominates a self-join and
-    // that the store pattern exists to avoid — is never generated.
-    val bSide = allBanded.filter(col("is_batch"))
-      .select(col("band"), col("band_hash"), col("doc_id").as("bid"))
-    val oSide = allBanded.select(col("band"), col("band_hash"),
-      col("doc_id").as("oid"))
-    val cands = bSide.join(oSide, Seq("band", "band_hash"))
+    // that the store pattern exists to avoid — is never generated. Sizes
+    // and batch flags ride the join, oriented with the ids.
+    val bSide = hood.filter(col("is_batch"))
+      .select(col("band"), col("band_hash"), col("doc_id").as("bid"),
+        col("sz").as("bsz"))
+    val oSide = hood.select(col("band"), col("band_hash"),
+      col("doc_id").as("oid"), col("sz").as("osz"), col("is_batch").as("obatch"))
+    val bFirst = col("bid") < col("oid")
+    val cands = bSide.join(oSide, keys)
       .filter(col("bid") =!= col("oid"))
       // canonical orientation; batch-batch pairs arrive in both
       // directions and must collapse to one
       .select(least(col("bid"), col("oid")).as("id_a"),
-        greatest(col("bid"), col("oid")).as("id_b"))
+        greatest(col("bid"), col("oid")).as("id_b"),
+        when(bFirst, col("bsz")).otherwise(col("osz")).as("sz_a"),
+        when(bFirst, col("osz")).otherwise(col("bsz")).as("sz_b"),
+        (bFirst || col("obatch")).as("a_batch"),
+        (!bFirst || col("obatch")).as("b_batch"))
       .distinct()
-    // verify inputs assembled incrementally: sizes ride the signatures,
     // the df cap merges the persisted corpus counts with the batch
     // increment (one union+groupBy — never a corpus shingle scan)
-    val sizes = storeSigs.select(col("doc_id"), col("sz"))
-      .unionByName(bsigs.select(col("doc_id"), col("sz")))
     val keep = storeDf.select(col("sh"), col("df"))
       .unionByName(bex.groupBy(col("sh")).agg(count(lit(1)).as("df")))
       .groupBy(col("sh")).agg(sum(col("df")).as("t"))
       .filter(col("t") <= maxDf).select(col("sh"))
-    // the store's shingle index enters lazily; verifyFromShingles
-    // semi-joins it to candidate docs before anything shuffles, so only
-    // candidate docs' shingles are ever read from the store
+    // the store's shingle index enters lazily and is semi-joined to the
+    // broadcast candidate-doc id set in its scan stage
     val ex = storeShingles.select(col("doc_id"), col("sh"))
       .unionByName(bex)
-    val pairs = verifyFromShingles(ex, cands, threshold, maxDf,
-      precomputedSizes = Some(sizes), precomputedKeep = Some(keep))
-      .select(col("id_a"), col("id_b"))
-    val flags = storeSigs.select(col("doc_id"), lit(false).as("is_batch"))
-      .unionByName(bsigs.select(col("doc_id"), lit(true).as("is_batch")))
-    classifyBatchPairs(pairs, flags)
+    val pairs = verifySized(ex, cands, keep, threshold, maxArrayDocShingles,
+      broadcastIds = true)
+    // batch ids from the batch itself: a doc without shingles has no
+    // signature, yet it must be decided
+    classifyBatchPairs(pairs, batch.select(col("doc_id")))
   }
 
-  /** Read one store table. recursiveFileLookup: appends may land as
-    * batch-keyed SUBDIRECTORIES (the idempotent form — see
-    * appendBatchToStore's `tag`), and must be read alongside the flat
-    * base files; partition inference is irrelevant (flat schema). */
+  /** Read one store table with its fixed schema. recursiveFileLookup:
+    * appends may land as batch-keyed SUBDIRECTORIES (the idempotent
+    * form — see appendBatchToStore's `tag`), and must be read alongside
+    * the flat base files; partition inference is irrelevant (flat
+    * schema). */
   private def readStoreTable(
-      spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.option("recursiveFileLookup", "true").parquet(path)
+      spark: org.apache.spark.sql.SparkSession, path: String,
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.read.schema(schema).option("recursiveFileLookup", "true").parquet(path)
 
   /** Convenience overload reading the three store tables from a
     * writeSignatureStore directory. */
@@ -1305,9 +1355,9 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession, batch: DataFrame,
       storePath: String, threshold: Double, maxDf: Int): DataFrame =
     dedupBatchAgainstStore(batch,
-      readStoreTable(spark, s"$storePath/signatures"),
-      readStoreTable(spark, s"$storePath/shingles"),
-      readStoreTable(spark, s"$storePath/df"),
+      readStoreTable(spark, s"$storePath/signatures", StoreSchema.signatures),
+      readStoreTable(spark, s"$storePath/shingles", StoreSchema.shingles),
+      readStoreTable(spark, s"$storePath/df", StoreSchema.df),
       threshold = threshold, maxDf = maxDf)
 
   /** Fold a deduped batch's SURVIVORS into the signature store — the

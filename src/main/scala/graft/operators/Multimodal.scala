@@ -1275,7 +1275,7 @@ object Multimodal {
     val h = imageHashRows(spark,
         docs.select(col("doc_id"), lit(false).as("variant")))
       .observe(obs, count(lit(1)).as("n"))
-      .localCheckpoint()
+      .materializeOnce()
     val n = Option(obs.get("n"))
       .map(_.asInstanceOf[Number].longValue).getOrElse(0L)
     graft.operators.Dedup.sizedForWrite(h, n)
@@ -1303,7 +1303,7 @@ object Multimodal {
     dedupImageHashesAgainstStore(spark,
       // batch fingerprints feed the join AND the final decision frame:
       // one codec pass (rule 5)
-      imageHashRows(spark, spec).localCheckpoint(),
+      imageHashRows(spark, spec).materializeOnce(),
       storePath, maxHamming, maxWideHamming, maxBucket)
 
   /** Decision core of m55/q154 over an ALREADY-fingerprinted batch —
@@ -1359,7 +1359,7 @@ object Multimodal {
     // shuffle partitions and explode the store's file count at scale)
     val obs = org.apache.spark.sql.Observation()
     val h = hashes.observe(obs, count(lit(1)).as("n"))
-      .localCheckpoint()
+      .materializeOnce()
     val n = Option(obs.get("n"))
       .map(_.asInstanceOf[Number].longValue).getOrElse(0L)
     graft.operators.Dedup.sizedForWrite(h, n)

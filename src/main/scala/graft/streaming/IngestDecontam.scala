@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Dedup
+import graft.operators.Materialize.Ops
 
 /** Streaming decontamination-on-ingest — d54's two-phase bloom →
   * exact-verify check applied at the door, the way a live training-data
@@ -36,7 +37,7 @@ object IngestDecontam {
       checkpoint: Option[String] = None): StreamingQuery =
     EventPipeline.withStreamPartitions(spark, 8) {
       // settled once; feeds every batch's bloom build AND verify join
-      val benchSh = Dedup.benchmarkShingles(bench, n).localCheckpoint()
+      val benchSh = Dedup.benchmarkShingles(bench, n).materializeOnce()
       val writer = spark.readStream
         .schema(IngestDedup.docsSchema(spark, docsDir))
         .option("maxFilesPerTrigger", 1)
@@ -46,17 +47,17 @@ object IngestDecontam {
       writer
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           // sink file counts derive from row counts riding the
-          // localCheckpoints as Observation metrics (guide §6 — the
+          // materializations as Observation metrics (guide §6 — the
           // writes were inheriting the stream's 8 shuffle partitions)
           val bObs = org.apache.spark.sql.Observation()
           val b = batch.observe(bObs, count(lit(1)).as("n"))
-            .localCheckpoint() // read by shingles AND clean join
+            .materializeOnce() // read by shingles AND clean join
           def metric(o: org.apache.spark.sql.Observation): Long =
             Option(o.get("n")).map(_.asInstanceOf[Number].longValue).getOrElse(0L)
           val fObs = org.apache.spark.sql.Observation()
           val flags = Dedup.decontaminateAgainst(b, benchSh, n, fpp = fpp)
             .observe(fObs, count(lit(1)).as("n"))
-            .localCheckpoint() // feeds the flag sink AND the clean anti-join
+            .materializeOnce() // feeds the flag sink AND the clean anti-join
           Dedup.sizedForWrite(flags, metric(fObs))
             .write.mode("overwrite").parquet(s"$sinkRoot/flags/batch_$batchId")
           // clean rows ≤ batch rows; the batch count is the right bound

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Dedup
+import graft.operators.Materialize.Ops
 
 /** Streaming dedup-on-ingest — the stream-native form of the d53 /
   * appendBatchToStore daily loop: document batches arriving as files
@@ -61,20 +62,21 @@ object IngestDedup {
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           // the batch source is re-read by several join branches inside
           // the dedup; pin it once
-          val b = batch.localCheckpoint()
+          val b = batch.materializeOnce()
           // sink file counts derive from each frame's ROW count (guide
           // §6 / rule 26 in reverse: the writes were inheriting the
           // stream's 8 shuffle partitions, so every micro-batch wrote a
           // fixed number of near-empty files). The counts ride the
-          // localCheckpoints as Observation metrics — zero extra jobs.
+          // materializations as Observation metrics — zero extra jobs.
           val resObs = org.apache.spark.sql.Observation()
           val res = Dedup
             .dedupBatchAgainstStore(spark, b, storePath, threshold, maxDf)
             .observe(resObs, count(lit(1)).as("n"))
             // decisions feed the sink AND the survivor semi-join; and
             // they MUST be fully materialized before the store append
-            // below mutates what dedupBatchAgainstStore reads
-            .localCheckpoint()
+            // below mutates what dedupBatchAgainstStore reads — a cut,
+            // so no strategy can recompute them against the new store
+            .materializeCut()
           def metric(o: org.apache.spark.sql.Observation): Long =
             Option(o.get("n")).map(_.asInstanceOf[Number].longValue).getOrElse(0L)
           Dedup.sizedForWrite(res, metric(resObs))
@@ -82,7 +84,7 @@ object IngestDedup {
           val survObs = org.apache.spark.sql.Observation()
           val survivors = b.join(res.filter(col("keep")).select(col("doc_id")),
             Seq("doc_id"), "left_semi")
-            .observe(survObs, count(lit(1)).as("n")).localCheckpoint()
+            .observe(survObs, count(lit(1)).as("n")).materializeOnce()
           Dedup.sizedForWrite(survivors, metric(survObs))
             .write.mode("overwrite").parquet(s"$sinkRoot/clean/batch_$batchId")
           Dedup.appendBatchToStore(survivors, storePath,

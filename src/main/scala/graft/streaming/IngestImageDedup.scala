@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.operators.Materialize.Ops
 import graft.operators.Multimodal
 
 /** Streaming IMAGE dedup-on-ingest (q154) — the IngestDedup store loop
@@ -48,16 +49,18 @@ object IngestImageDedup {
       writer
         .foreachBatch { (spec: DataFrame, batchId: Long) =>
           // ONE codec pass: the hash frame feeds decisions AND append
-          val hashes = Multimodal.imageHashRows(spark, spec).localCheckpoint()
+          val hashes = Multimodal.imageHashRows(spark, spec).materializeOnce()
           // decisions must be fully materialized before the append
-          // below mutates what the store read sees; the row count rides
-          // the checkpoint so the sink write's file count is row-derived
-          // (guide §6) instead of the stream's 8 shuffle partitions
+          // below mutates what the store read sees (a cut, so no
+          // strategy can recompute them against the new store); the row
+          // count rides the checkpoint so the sink write's file count is
+          // row-derived (guide §6) instead of the stream's 8 shuffle
+          // partitions
           val resObs = org.apache.spark.sql.Observation()
           val res = Multimodal
             .dedupImageHashesAgainstStore(spark, hashes, storePath)
             .observe(resObs, count(lit(1)).as("n"))
-            .localCheckpoint()
+            .materializeCut()
           val nRes = Option(resObs.get("n"))
             .map(_.asInstanceOf[Number].longValue).getOrElse(0L)
           graft.operators.Dedup.sizedForWrite(res, nRes)

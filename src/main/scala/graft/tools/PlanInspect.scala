@@ -13,13 +13,17 @@ object PlanInspect {
 
   /** Flatten the executed plan, descending through AQE wrappers whose
     * children hide behind executedPlan/plan instead of children. */
-  def nodes(p: SparkPlan): Seq[SparkPlan] = {
-    val kids = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case q: QueryStageExec => Seq(q.plan)
-      case other => other.children
-    }
-    p +: kids.flatMap(nodes)
+  def nodes(p: SparkPlan): Seq[SparkPlan] = p +: children(p).flatMap(nodes)
+
+  /** Every node of the flattened plan with its ancestors, nearest first. */
+  def withAncestors(
+      p: SparkPlan, up: List[SparkPlan] = Nil): Seq[(SparkPlan, List[SparkPlan])] =
+    (p, up) +: children(p).flatMap(withAncestors(_, p :: up))
+
+  private def children(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+    case q: QueryStageExec => Seq(q.plan)
+    case other => other.children
   }
 
   /** Execute `df` and return its flattened final plan nodes. */

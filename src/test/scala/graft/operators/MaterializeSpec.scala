@@ -75,4 +75,30 @@ class MaterializeSpec extends SparkSpec {
       assert(verifiedPairs() == Set((1L, 2L), (3L, 4L)))
     }
   }
+
+  test("operators and streaming cut lineage only through the seam") {
+    // a direct localCheckpoint()/checkpoint() silently ignores the
+    // configured strategy; comment lines and trailing comments are skipped
+    val direct = """\.(localCheckpoint|checkpoint)\s*\(""".r
+    val roots = Seq("src/main/scala/graft/operators", "src/main/scala/graft/streaming")
+    val hits = roots.flatMap { r =>
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(r))
+      try {
+        import scala.jdk.CollectionConverters._
+        walk.iterator().asScala.toList
+      } finally walk.close()
+    }.filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "Materialize.scala")
+      .flatMap { p =>
+        java.nio.file.Files.readAllLines(p).toArray(Array.empty[String]).toSeq
+          .zipWithIndex.collect {
+            case (line, i) if {
+              val t = line.trim
+              !t.startsWith("*") && !t.startsWith("/*") &&
+                direct.findFirstIn(t.split("//", 2)(0)).isDefined
+            } => s"$p:${i + 1}: ${line.trim}"
+          }
+      }
+    assert(hits.isEmpty, "direct lineage cuts bypass Materialize:\n" + hits.mkString("\n"))
+  }
 }
