@@ -4,7 +4,9 @@ import java.nio.file.{Files, Paths}
 import scala.collection.mutable
 import scala.reflect.runtime.universe.TypeTag
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.trees.TreePattern
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
 
@@ -52,6 +54,16 @@ final case class FileTable(name: String, fpath: String) {
   }
 }
 
+/** What a statement's DataFrame depends on besides the tables' files:
+  * the catalog that bound it (and that catalog's mutation count when the
+  * lookup began), the SQL text as received, and the session's
+  * explicitly-set confs. */
+final case class StatementKey(
+    owner: DataSource, version: Long, sql: String, confs: Map[String, String]) {
+  /** False once the owning catalog has mutated since this key was taken. */
+  def current: Boolean = owner.catalogVersion == version
+}
+
 /** Table-load cache policy (reference: dfsql/cache.py). With Spark the
   * "load" is a lazy plan, so MemoryCache maps to `persist()` of the scan. */
 sealed trait TableCache {
@@ -59,6 +71,9 @@ sealed trait TableCache {
   def clear(): Unit
   /** Drop one path's entry (table dropped / its file overwritten). */
   def invalidate(fpath: String): Unit = ()
+  /** The DataFrame of the SELECT `key` names: `build`'s, or one an
+    * earlier call with an equal key built. */
+  def statement(key: StatementKey)(build: => DataFrame): DataFrame = build
 }
 /** reference: cache.py:12 DoNothingCache — re-plan every access. */
 final class DoNothingCache extends TableCache {
@@ -69,9 +84,22 @@ final class DoNothingCache extends TableCache {
   * Tracks hits/misses like functools.lru_cache.cache_info() (reference
   * tests/test_cache.py asserts on those counters) and honors lru_cache's
   * `maxsize`: beyond it, the least-recently-USED entry is unpersisted and
-  * evicted (LinkedHashMap in access order via remove+reinsert on hit). */
+  * evicted (LinkedHashMap in access order via remove+reinsert on hit).
+  *
+  * It also keeps the last `StatementBound` executed statement DataFrames
+  * (least-recently-used evicted), so a repeated SELECT reuses its AQE
+  * final plan, compiled code and materialized shuffle/broadcast stages
+  * and only its result stage runs again. Only statements whose analyzed
+  * plan, subqueries included, is deterministic and reads no current
+  * time/date/user are kept. A mutation of the owning catalog makes its
+  * older entries unreachable (the key carries the catalog version), and
+  * the next miss drops them; `invalidate` and `clear` drop every entry.
+  * A build that overlapped any of these is not kept. An evicted frame is
+  * only dereferenced, so the ContextCleaner removes its shuffle files. */
 final class MemoryCache(maxsize: Option[Int] = None) extends TableCache {
   private val loaded = mutable.LinkedHashMap[String, DataFrame]()
+  private val statements = mutable.LinkedHashMap[StatementKey, DataFrame]()
+  private var dropped = 0L // bumped whenever statement entries are dropped
   private var hitCount = 0L
   private var missCount = 0L
   def get(spark: SparkSession, t: FileTable): DataFrame = synchronized {
@@ -97,13 +125,47 @@ final class MemoryCache(maxsize: Option[Int] = None) extends TableCache {
   def clear(): Unit = synchronized {
     loaded.values.foreach(_.unpersist())
     loaded.clear()
+    dropStatements()
     hitCount = 0; missCount = 0
   }
   override def invalidate(fpath: String): Unit = synchronized {
     loaded.remove(fpath).foreach(_.unpersist())
+    dropStatements() // any statement may read that path
   }
+  private def dropStatements(): Unit = { statements.clear(); dropped += 1 }
+
+  override def statement(key: StatementKey)(build: => DataFrame): DataFrame = {
+    val (hit, stamp) = synchronized {
+      (statements.remove(key).map { df => statements(key) = df; df }, dropped)
+    }
+    hit.getOrElse {
+      val df = build
+      if (MemoryCache.reusable(df)) synchronized {
+        if (stamp == dropped && key.current) {
+          statements.filterInPlace((k, _) => k.current)
+          statements(key) = df
+          while (statements.size > MemoryCache.StatementBound)
+            statements.remove(statements.head._1)
+        }
+      }
+      df
+    }
+  }
+
   /** (hits, misses, currentSize) — the cache_info() analog. */
   def info: (Long, Long, Int) = synchronized((hitCount, missCount, loaded.size))
+}
+
+object MemoryCache {
+  /** Executed statement frames kept per cache. */
+  val StatementBound = 64
+
+  /** Same rows on every run: no nondeterministic expression and no
+    * current time/date/user, in the plan or any subquery. */
+  private def reusable(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.collectFirstWithSubqueries {
+      case p if !p.deterministic || p.containsPattern(TreePattern.CURRENT_LIKE) => p
+    }.isEmpty
 }
 
 /** The dfsql catalog facade over a SparkSession (reference:
@@ -124,6 +186,11 @@ class DataSource(
   private val tables = mutable.LinkedHashMap[String, FileTable]()
   private var cache: TableCache = initialCache
   private val customFnNames = mutable.ArrayBuffer[String]()
+  private val version = new java.util.concurrent.atomic.AtomicLong
+
+  /** Catalog mutations so far: tables, cache policy or functions. */
+  private[catalog] def catalogVersion: Long = version.get
+  private def mutated(): Unit = version.incrementAndGet()
 
   Files.createDirectories(Paths.get(metadataDir))
   // sessions not built withExtensions still get the dialect's pushdown
@@ -149,6 +216,7 @@ class DataSource(
           "remove it if you want to recreate it.")
     registerView(t) // validates readability, like FileTable.from_file
     tables(norm(t.name)) = t
+    mutated()
     saveMetadata()
   }
 
@@ -164,15 +232,28 @@ class DataSource(
     addTable(FileTable(name, path))
   }
 
+  /** Unregister a table. Output that `saveTable` wrote is deleted with
+    * it; a file registered from a path is never touched. */
   def dropTable(name: String): Unit = {
     tables.remove(norm(name)) match {
       case Some(t) =>
         spark.catalog.dropTempView(t.name)
         cache.invalidate(t.fpath) // a later same-path table must re-read
+        mutated()
+        if (savedHere(t)) FileUtils.deleteDirectory(new java.io.File(t.fpath))
       case None => throw new QueryExecutionException(s"Unknown table $name")
     }
     saveMetadata()
   }
+
+  /** `saveTable` wrote `t`: it sits at the path saveTable gives its name
+    * and carries saveTable's marker (Spark's readers skip `_` files). */
+  private def savedHere(t: FileTable): Boolean =
+    Paths.get(t.fpath) == savePath(t.name, t.format) &&
+      Files.isRegularFile(Paths.get(t.fpath, DataSource.SavedMarker))
+
+  private def savePath(name: String, format: String) =
+    Paths.get(metadataDir, s"$name.$format")
 
   def tableMeta(name: String): FileTable = tables.get(norm(name)) match {
     case Some(t) => t
@@ -187,6 +268,7 @@ class DataSource(
   def setCache(c: TableCache): Unit = {
     cache.clear()
     cache = c
+    mutated()
     tables.values.foreach(registerView) // views follow the new policy
   }
 
@@ -204,7 +286,7 @@ class DataSource(
       throw new QueryExecutionException(
         s"Table $name already exists in data source, use DROP TABLE to " +
           "remove it if you want to recreate it.")
-    val path = Paths.get(metadataDir, s"$name.$format").toString
+    val path = savePath(name, format).toString
     // overwrite: the name-collision check above protects registered
     // tables; anything already at this managed path is an orphan from a
     // dropped table and must not block re-creation
@@ -219,9 +301,11 @@ class DataSource(
         .option("rowTag", "row").xml(path)
       case _ => partitioned.parquet(path)
     }
+    Files.createFile(Paths.get(path, DataSource.SavedMarker))
     val t = FileTable(name, path)
     tables(norm(name)) = t
     cache.invalidate(path) // the path's content just changed
+    mutated()
     registerView(t)
     saveMetadata()
   }
@@ -246,6 +330,7 @@ class DataSource(
 
   def loadMetadata(): Unit = {
     if (!Files.exists(metaPath)) return
+    mutated()
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = mapper.readTree(Files.readString(metaPath))
     val it = root.fields()
@@ -274,11 +359,13 @@ class DataSource(
   def registerFunction[A: TypeTag, R: TypeTag](name: String, f: A => R): Unit = {
     spark.udf.register(name, f)
     customFnNames += name
+    mutated()
   }
   def registerFunction2[A: TypeTag, B: TypeTag, R: TypeTag](
       name: String, f: (A, B) => R): Unit = {
     spark.udf.register(name, f)
     customFnNames += name
+    mutated()
   }
 
   /** Register a custom aggregate (reference AggregateFunction subclasses →
@@ -287,6 +374,7 @@ class DataSource(
       name: String, agg: Aggregator[IN, BUF, OUT]): Unit = {
     spark.udf.register(name, udaf(agg))
     customFnNames += name
+    mutated()
   }
 
   def customFunctionNames: Seq[String] = customFnNames.toSeq
@@ -295,47 +383,61 @@ class DataSource(
 
   /** Command sniff first (3 regex commands), else dialect-lower and hand
     * to Catalyst. Returns a QueryResult; use queryDF when a DataFrame is
-    * expected. */
+    * expected.
+    *
+    * Under MemoryCache a returned DataFrame may be shared between calls:
+    * a repeated deterministic SELECT gives the DataFrame an earlier call
+    * built. The reuse key is the SQL text as received, this catalog's
+    * version and the session's explicitly-set confs (`spark.conf.getAll`).
+    * The version moves on addTable, dropTable, saveTable/CTAS, setCache,
+    * loadMetadata, registerFunction, registerFunction2 and
+    * registerAggregate; MemoryCache.invalidate/clear drop every entry. */
   def query(sql: String, reduceOutput: Boolean = false): QueryResult = {
     Commands.tryParse(sql) match {
       case Some(cmd) => cmd.execute(this)
       case None =>
-        val lowered = Dialect.lower(sql)
-        // (re-)register views for the tables THIS statement references:
-        // restores isolation between DataSources sharing a session (each
-        // statement sees its own catalog's bindings) and DoNothingCache's
-        // re-plan-every-access contract, without the old cost of
-        // re-registering every catalog table on every query.
-        // backticked references (`lineitem`) count too — Tick tokens are
-        // stripped of their quotes so they hit the same name set.
-        val words = Dialect.tokenize(sql).collect {
-          case Dialect.Word(w) => w.toLowerCase
-          case Dialect.Tick(w) => w.stripPrefix("`").stripSuffix("`").toLowerCase
-        }.toSet
-        tables.values.foreach { t =>
-          if (words.contains(t.name.toLowerCase)) registerView(t)
-        }
-        // honor the reference's case-sensitivity flag for COLUMN lookup
-        // too (utils.py:87-167): Spark's conf is session-global, so pin
-        // it for the analysis of this statement and restore after.
-        val prevCase = spark.conf.getOption("spark.sql.caseSensitive")
-        spark.conf.set("spark.sql.caseSensitive", caseSensitive)
-        val df =
-          try graft.sql.JoinNaming.disambiguate(spark.sql(lowered))
-          catch {
-            case e: org.apache.spark.sql.AnalysisException
-                if e.getCondition == "TABLE_OR_VIEW_NOT_FOUND" =>
-              // reference error contract (base_data_source.py:177-178)
-              throw new QueryExecutionException(
-                s"Unknown table ${e.messageParameters.getOrElse("relationName", "?")}")
-          } finally {
-            prevCase match {
-              case Some(v) => spark.conf.set("spark.sql.caseSensitive", v)
-              case None => spark.conf.unset("spark.sql.caseSensitive")
-            }
-          }
-        // duplicate-output-name detection lives in JoinNaming.disambiguate
+        val key = StatementKey(this, catalogVersion, sql, spark.conf.getAll)
+        val df = cache.statement(key)(analyze(sql))
         if (reduceOutput) QueryResult.reduce(df) else QueryResult.Frame(df)
+    }
+  }
+
+  private def analyze(sql: String): DataFrame = {
+    val lowered = Dialect.lower(sql)
+    // (re-)register views for the tables THIS statement references:
+    // restores isolation between DataSources sharing a session (each
+    // statement sees its own catalog's bindings) and DoNothingCache's
+    // re-plan-every-access contract, without the old cost of
+    // re-registering every catalog table on every query.
+    // backticked references (`lineitem`) count too — Tick tokens are
+    // stripped of their quotes so they hit the same name set.
+    val words = Dialect.tokenize(sql).collect {
+      case Dialect.Word(w) => w.toLowerCase
+      case Dialect.Tick(w) => w.stripPrefix("`").stripSuffix("`").toLowerCase
+    }.toSet
+    tables.values.foreach { t =>
+      if (words.contains(t.name.toLowerCase)) registerView(t)
+    }
+    // honor the reference's case-sensitivity flag for COLUMN lookup
+    // too (utils.py:87-167): Spark's conf is session-global, so pin
+    // it for the analysis of this statement and restore after (unset if
+    // it was unset: getOption would give the default, and setting that
+    // would change the session's explicit confs, the statement key).
+    val prevCase = spark.conf.getAll.get("spark.sql.caseSensitive")
+    spark.conf.set("spark.sql.caseSensitive", caseSensitive)
+    // duplicate-output-name detection lives in JoinNaming.disambiguate
+    try graft.sql.JoinNaming.disambiguate(spark.sql(lowered))
+    catch {
+      case e: org.apache.spark.sql.AnalysisException
+          if e.getCondition == "TABLE_OR_VIEW_NOT_FOUND" =>
+        // reference error contract (base_data_source.py:177-178)
+        throw new QueryExecutionException(
+          s"Unknown table ${e.messageParameters.getOrElse("relationName", "?")}")
+    } finally {
+      prevCase match {
+        case Some(v) => spark.conf.set("spark.sql.caseSensitive", v)
+        case None => spark.conf.unset("spark.sql.caseSensitive")
+      }
     }
   }
 
@@ -348,6 +450,10 @@ class DataSource(
 }
 
 object DataSource {
+  /** Marker file `saveTable` leaves in its output: dropTable deletes only
+    * output that carries it. */
+  val SavedMarker = "_graft_saved_table"
+
   /** Wipe any existing metadata in the directory and start fresh
     * (reference: base_data_source.py:92-97 create_new/clear_metadata). */
   def createNew(

@@ -1,8 +1,13 @@
 package graft.catalog
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
+import java.util.concurrent.{Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
-import graft.SparkSpec
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row}
+import org.apache.spark.sql.expressions.Aggregator
+
+import graft.{QueryExecutionException, SparkSpec}
 
 /** Port of the reference cache accounting tests (tests/test_cache.py:
   * hit/miss/size via cache_info). */
@@ -74,5 +79,208 @@ class CacheSpec extends SparkSpec {
       case QueryResult.Scalar(v) => assert(v.asInstanceOf[Long] > 0)
       case other => fail(s"expected Scalar, got $other")
     }
+  }
+
+  // ---- statement cache: a repeated SELECT reuses its executed DataFrame
+
+  private def csv(dir: Path, name: String, body: String): String = {
+    val p = dir.resolve(s"$name.csv")
+    Files.writeString(p, body)
+    p.toString
+  }
+
+  private def rows(df: DataFrame): Seq[Row] = df.collect().toSeq
+
+  /** Listener-counted jobs and compiled codegen classes of `body`. */
+  private def jobsAndCompiles[A](body: => A): (A, Int, Long) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    try {
+      val a = body
+      org.apache.spark.ListenerBusDrain(sc)
+      (a, jobs.get, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("statement cache: a repeated join+aggregate reruns only its result " +
+    "stage and compiles nothing") {
+    val dir = Files.createTempDirectory("graft_stmt_hit")
+    val ds = new DataSource(spark, dir.toString)
+    ds.addTableFromFile(csv(dir, "orders", "o_id,c_id,amt\n1,1,10\n2,1,5\n3,2,7\n4,3,1\n"))
+    ds.addTableFromFile(csv(dir, "cust", "c_id,name\n1,ann\n2,bob\n3,cy\n"))
+    val sql = """SELECT c.name, sum(o.amt) AS total, count(*) AS n
+      |FROM orders o JOIN cust c ON o.c_id = c.c_id
+      |GROUP BY c.name ORDER BY c.name""".stripMargin
+    val (first, jobs1, _) = jobsAndCompiles(rows(ds.queryDF(sql)))
+    val (second, jobs2, compiles2) = jobsAndCompiles(rows(ds.queryDF(sql)))
+    assert(first === Seq(Row("ann", 15L, 2L), Row("bob", 7L, 1L), Row("cy", 1L, 1L)))
+    assert(second === first)
+    // the first run fills both persisted tables and runs every AQE stage
+    // (7 jobs); the hit reruns the result stage over the materialized ones
+    assert((jobs1, jobs2) === ((7, 1)), s"jobs first/second: $jobs1/$jobs2")
+    assert(compiles2 === 0L, s"the hit compiled $compiles2 codegen classes")
+  }
+
+  test("statement cache: a hit returns the same DataFrame; DoNothingCache never reuses") {
+    val (ds, _) = fixture()
+    val sql = "SELECT a, b FROM t ORDER BY a"
+    val df = ds.queryDF(sql)
+    assert(ds.queryDF(sql) eq df)
+    assert(rows(ds.queryDF(sql)) === Seq(Row(1, "x"), Row(2, "y")))
+    val dir = Files.createTempDirectory("graft_stmt_nothing")
+    val plain = new DataSource(spark, dir.toString, initialCache = new DoNothingCache)
+    plain.addTableFromFile(csv(dir, "t", "a,b\n1,x\n"))
+    assert(plain.queryDF(sql) ne plain.queryDF(sql))
+  }
+
+  test("statement cache: every catalog mutation makes the next identical statement miss") {
+    val dir = Files.createTempDirectory("graft_stmt_mut")
+    val ds = new DataSource(spark, dir.toString)
+    val tPath = csv(dir, "t", "a\n1\n2\n")
+    ds.addTableFromFile(tPath)
+    val sql = "SELECT sum(a) AS s FROM t"
+    var cache = new MemoryCache
+    ds.setCache(cache)
+    val mutations: Seq[(String, () => Unit)] = Seq(
+      "addTable" -> (() => ds.addTable(FileTable("extra", csv(dir, "extra", "a\n5\n")))),
+      "dropTable" -> (() => ds.dropTable("extra")),
+      "saveTable" -> (() => ds.saveTable("saved", ds.table("t"))),
+      "CTAS" -> (() => ds.query("CREATE TABLE ctas AS SELECT a FROM t")),
+      "setCache" -> { () => cache = new MemoryCache; ds.setCache(cache) },
+      "loadMetadata" -> (() => ds.loadMetadata()),
+      "registerFunction" -> (() => ds.registerFunction[Int, Int]("f1", _ + 1)),
+      "registerFunction2" -> (() => ds.registerFunction2[Int, Int, Int]("f2", _ + _)),
+      "registerAggregate" -> (() => ds.registerAggregate("agg1", new CacheSpec.SumAgg)),
+      "MemoryCache.invalidate" -> (() => cache.invalidate(tPath)),
+      "MemoryCache.clear" -> (() => cache.clear()))
+    mutations.foreach { case (kind, mutate) =>
+      val before = ds.queryDF(sql)
+      assert(ds.queryDF(sql) eq before, s"no hit before $kind")
+      mutate()
+      val after = ds.queryDF(sql)
+      assert(after ne before, s"$kind left the cached statement in place")
+      assert(rows(after) === Seq(Row(3L)), kind)
+    }
+  }
+
+  test("statement cache: re-added, dropped and reloaded tables and " +
+    "re-registered functions are seen by the next identical statement") {
+    val dir = Files.createTempDirectory("graft_stmt_state")
+    val ds = new DataSource(spark, dir.toString)
+    ds.addTableFromFile(csv(dir, "t", "a\n1\n2\n"))
+    val count = "SELECT count(*) AS n FROM t"
+    assert(rows(ds.queryDF(count)) === Seq(Row(2L)))
+    assert(rows(ds.queryDF(count)) === Seq(Row(2L)))
+    // re-added under the same name with other rows
+    ds.dropTable("t")
+    val e = intercept[QueryExecutionException](ds.queryDF(count))
+    assert(e.getMessage.startsWith("Unknown table") && e.getMessage.contains("t"))
+    val other = Files.createTempDirectory("graft_stmt_other")
+    ds.addTable(FileTable("t", csv(other, "t", "a\n7\n8\n9\n")))
+    assert(rows(ds.queryDF(count)) === Seq(Row(3L)))
+    // a re-registered UDF gives its new value
+    val udf = "SELECT f(a) AS v FROM t ORDER BY v"
+    ds.registerFunction[Int, Int]("f", _ + 1)
+    assert(rows(ds.queryDF(udf)) === Seq(Row(8), Row(9), Row(10)))
+    assert(rows(ds.queryDF(udf)) === Seq(Row(8), Row(9), Row(10)))
+    ds.registerFunction[Int, Int]("f", _ * 10)
+    assert(rows(ds.queryDF(udf)) === Seq(Row(70), Row(80), Row(90)))
+    // a metadata reload picks up what another catalog wrote
+    val peer = new DataSource(spark, dir.toString)
+    peer.dropTable("t")
+    peer.addTable(FileTable("t", csv(dir, "t4", "a\n1\n1\n1\n1\n")))
+    assert(rows(ds.queryDF(count)) === Seq(Row(3L)))
+    ds.loadMetadata()
+    assert(rows(ds.queryDF(count)) === Seq(Row(4L)))
+  }
+
+  test("statement cache: rand() and current_timestamp() are never reused") {
+    val (ds, _) = fixture()
+    Seq(
+      "SELECT a, rand() AS r FROM t",
+      "SELECT a, current_timestamp() AS ts FROM t",
+      "SELECT a FROM t WHERE a IN (SELECT a FROM t WHERE rand() < 2.0)",
+      "SELECT a FROM t WHERE EXISTS (SELECT 1 FROM t WHERE current_date() IS NOT NULL)"
+    ).foreach { sql =>
+      assert(ds.queryDF(sql) ne ds.queryDF(sql), sql)
+    }
+  }
+
+  test("statement cache: a changed session conf misses") {
+    val (ds, _) = fixture()
+    val sql = "SELECT a FROM t ORDER BY a"
+    val key = "spark.sql.ansi.enabled"
+    val prev = spark.conf.getAll.get(key)
+    val first = ds.queryDF(sql)
+    try {
+      spark.conf.set(key, (!spark.conf.get(key).toBoolean).toString)
+      val flipped = ds.queryDF(sql)
+      assert(flipped ne first)
+      assert(ds.queryDF(sql) eq flipped)
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+    assert(ds.queryDF(sql) eq first)
+  }
+
+  test("statement cache: the bound evicts the least-recently-used statement") {
+    val (ds, _) = fixture()
+    def stmt(k: Int) = s"SELECT a + $k AS v FROM t"
+    val first = (0 until MemoryCache.StatementBound).map(k => ds.queryDF(stmt(k)))
+    assert(ds.queryDF(stmt(0)) eq first(0)) // all held; s0 now most recently used
+    ds.queryDF(stmt(MemoryCache.StatementBound))
+    assert(ds.queryDF(stmt(0)) eq first(0))
+    assert(ds.queryDF(stmt(2)) eq first(2))
+    assert(ds.queryDF(stmt(1)) ne first(1)) // the least recently used went
+  }
+
+  test("statement cache: 4 threads of mixed hits and misses on one catalog " +
+    "give no wrong rows") {
+    val dir = Files.createTempDirectory("graft_stmt_threads")
+    val ds = new DataSource(spark, dir.toString)
+    ds.addTableFromFile(csv(dir, "t", "a\n" + (1 to 9).mkString("\n") + "\n"))
+    val wrong = new AtomicInteger
+    val failed = new AtomicInteger
+    val pool = Executors.newFixedThreadPool(4)
+    try {
+      (0 until 4).foreach { th =>
+        pool.submit(new Runnable {
+          def run(): Unit = (0 until 60).foreach { i =>
+            val k = 1 + (th + i) % 4
+            // even steps repeat one of four statements, odd ones are new
+            val sql =
+              if (i % 2 == 0) s"SELECT count(*) AS n FROM t WHERE a <= $k"
+              else s"SELECT count(*) AS n FROM t WHERE a <= $k AND $th$i = $th$i"
+            try {
+              if (ds.queryDF(sql).collect().toSeq != Seq(Row(k.toLong))) wrong.incrementAndGet()
+            } catch { case _: Exception => failed.incrementAndGet() }
+          }
+        })
+      }
+    } finally {
+      pool.shutdown()
+      assert(pool.awaitTermination(5, TimeUnit.MINUTES))
+    }
+    assert((wrong.get, failed.get) === ((0, 0)))
+  }
+}
+
+object CacheSpec {
+  final class SumAgg extends Aggregator[Int, Long, Long] {
+    def zero: Long = 0L
+    def reduce(b: Long, a: Int): Long = b + a
+    def merge(x: Long, y: Long): Long = x + y
+    def finish(b: Long): Long = b
+    def bufferEncoder: Encoder[Long] = Encoders.scalaLong
+    def outputEncoder: Encoder[Long] = Encoders.scalaLong
   }
 }

@@ -1,6 +1,6 @@
 package graft.catalog
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 
 import graft.{QueryExecutionException, SparkSpec}
 
@@ -272,5 +272,55 @@ class DataSourceSpec extends SparkSpec {
     val out = ds.queryDF(
       "SELECT passenger_id, double_fare(fare) AS f2 FROM titanic WHERE passenger_id = 1")
     assert(out.head.getDouble(1) === 14.5)
+  }
+
+  test("regression: dropTable deletes what saveTable/CTAS wrote, also after " +
+    "a metadata reload") {
+    val dir = tmpDir()
+    val ds = new DataSource(spark, dir.toString)
+    ds.addTableFromFile(titanicCsv(dir))
+    ds.query("CREATE TABLE survivors AS SELECT name FROM titanic WHERE survived = 1")
+    ds.saveTable("fares", ds.table("titanic").select("fare"), format = "csv")
+    ds.saveTable("by_sex", ds.table("titanic"), partitionBy = Seq("sex"))
+    val out = Seq("survivors.parquet", "fares.csv", "by_sex.parquet").map(dir.resolve)
+    assert(out.forall(Files.isDirectory(_)))
+    // the marker is invisible to readers
+    assert(ds.queryDF("SELECT count(*) AS n FROM survivors").head.getLong(0) === 4L)
+    ds.dropTable("survivors")
+    assert(!Files.exists(out(0)))
+    // a fresh catalog over the same metadata drops what the first one wrote
+    val reloaded = new DataSource(spark, dir.toString)
+    reloaded.dropTable("fares")
+    reloaded.query("DROP TABLE by_sex")
+    assert(!Files.exists(out(1)) && !Files.exists(out(2)))
+    assert(Files.exists(dir.resolve("titanic.csv")))
+  }
+
+  test("regression: dropTable never deletes a table registered from a path") {
+    val dir = tmpDir()
+    val csv = titanicCsv(dir) // inside the metadata dir
+    val ds = new DataSource(spark, dir.toString)
+    ds.query(s"CREATE TABLE ($csv)")
+    // a Spark-written directory at the path saveTable would use, not
+    // written by saveTable
+    val raw = dir.resolve("raw.parquet")
+    ds.table("titanic").write.parquet(raw.toString)
+    ds.addTableFromFile(raw.toString)
+    // another catalog's saveTable output, registered here by path
+    val otherDir = tmpDir()
+    val other = new DataSource(spark, otherDir.toString)
+    other.saveTable("kept", ds.table("titanic"))
+    ds.addTableFromFile(otherDir.resolve("kept.parquet").toString)
+    val fresh = new DataSource(spark, dir.toString)
+    Seq("titanic", "raw", "kept").foreach(fresh.dropTable)
+    assert(Files.isRegularFile(Paths.get(csv)) && Files.isDirectory(raw))
+    assert(other.queryDF("SELECT count(*) AS n FROM kept").head.getLong(0) === 9L)
+    // fromDir registrations are kept too, even when the files dir is the
+    // metadata dir
+    val data = tmpDir()
+    titanicCsv(data)
+    val scanned = DataSource.fromDir(spark, data.toString, data.toString)
+    scanned.dropTable("titanic")
+    assert(Files.exists(data.resolve("titanic.csv")))
   }
 }

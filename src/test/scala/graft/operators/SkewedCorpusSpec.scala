@@ -1,9 +1,13 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.LeftAnti
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.tools.PlanInspect
 
 /** The skew-path proof (round-7 directive 1).
   *
@@ -95,6 +99,16 @@ class SkewedCorpusSpec extends SparkSpec {
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     assert(plan.contains("LeftAnti"),
       s"capped candidate plan lost the overfull-key anti-join:\n$plan")
+    // both sides of the bucket self-join read the cap's anti-join; on the
+    // final AQE plan (rule 8) the overfull-key list is built by ONE
+    // BroadcastExchange and the other side reuses it
+    val builds = PlanInspect.withAncestors(cappedDf.queryExecution.executedPlan)
+      .collect { case (x @ (_: BroadcastExchangeExec | _: ReusedExchangeExec), up)
+        if up.collectFirst { case j: BroadcastHashJoinExec => j.joinType }
+          .contains(LeftAnti) => x }
+    assert(builds.size === 2 &&
+      builds.count(_.isInstanceOf[BroadcastExchangeExec]) === 1,
+      s"overfull-key list not built once and reused: ${builds.map(_.nodeName)}")
     assert(plantedPairs.subsetOf(capped),
       "cap dropped a planted near-dup pair — recall broken")
     assert(capped.size < uncapped.size,
