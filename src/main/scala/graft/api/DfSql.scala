@@ -1,8 +1,18 @@
 package graft.api
 
-import org.apache.spark.sql.DataFrame
+import java.util.Locale
 
-import graft.DfsqlException
+import scala.collection.mutable
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedFunction, UnresolvedInlineTable, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LocalRelation, LogicalPlan, OneRowRelation, SubqueryAlias, UnresolvedWith}
+import org.apache.spark.sql.graft.CatalystBridge
+
+import graft.{DfsqlException, UnknownTable}
+import graft.catalog.StatementLru
 import graft.sql.Dialect
 
 /** One-shot functional entry points mirroring the reference's
@@ -10,15 +20,27 @@ import graft.sql.Dialect
   * the `df.sql("SELECT …")` accessor (reference: dfsql/extensions.py:10-68).
   *
   * Unlike the reference — which round-trips every DataFrame through a temp
-  * CSV — incoming DataFrames are registered directly as temp views: there
-  * is no driver-side materialization, so the query plans (and their
-  * pushdowns) stay fully distributed.
-  */
+  * CSV — incoming DataFrames are bound straight into the parsed plan:
+  * each relation a binding names becomes that DataFrame's plan, in
+  * subqueries too, and a CTE of the same name shadows the binding. No
+  * temp view is registered, so a call touches no session state and calls
+  * on one session can run from many threads. There is no driver-side
+  * materialization: the plans (and their pushdowns) stay distributed.
+  *
+  * A repeated call gets the executed DataFrame of the earlier one (a
+  * `StatementLru`), so only its result stage runs again. The key is the
+  * final SQL text, the binding names, the bound DataFrames by reference
+  * and the session's explicitly-set confs. A DataFrame is kept and served
+  * only while every bound DataFrame is persisted (the same cache entry as
+  * when it was built), every relation of the statement is a binding or a
+  * CTE, every function it calls has the registration it had, and its
+  * plan is deterministic and reads no current time; unpersisted
+  * bindings never reuse. */
 object DfSql {
 
   /** Run `sql` against the given name→DataFrame bindings. Mirrors the
     * reference's validations: at least one table; every binding must be
-    * referenced in the SQL text. Views are dropped in `finally`. */
+    * referenced in the SQL text. */
   def sqlQuery(sql: String, tables: (String, DataFrame)*): DataFrame = {
     if (tables.isEmpty)
       throw new DfsqlException(
@@ -28,38 +50,97 @@ object DfSql {
         throw new DfsqlException(
           s"Table $name found in from_tables, but not in the SQL query.")
     }
+    val cached = tables.map { case (_, df) => CatalystBridge.cacheEntry(df) }
+    if (cached.contains(None)) bind(sql, tables)._1
+    else {
+      val bindings = tables.zip(cached.flatten).map { case ((name, df), c) => new Binding(name, df, c) }
+      statements(Key(sql, bindings, tables.head._2.sparkSession.conf.getAll)) {
+        val (df, current) = bind(sql, tables)
+        df -> (() => bindings.forall(_.current) && current())
+      }
+    }
+  }
+
+  private val statements = new StatementLru[Key]
+
+  /** What a sqlQuery DataFrame depends on: the final SQL text, its
+    * bindings and the session's explicitly-set confs. */
+  private final case class Key(sql: String, bindings: Seq[Binding], confs: Map[String, String])
+
+  /** A bound name, its DataFrame and the cache entry that DataFrame read
+    * when the call began; equal only for the same name, DataFrame object
+    * and entry. */
+  private final class Binding(val name: String, val df: DataFrame, val cached: AnyRef) {
+    /** Still the same cache entry: not unpersisted since. */
+    def current: Boolean = CatalystBridge.cacheEntry(df).exists(_ eq cached)
+    override def equals(o: Any): Boolean = o match {
+      case b: Binding => name == b.name && (df eq b.df) && (cached eq b.cached)
+      case _ => false
+    }
+    override def hashCode: Int =
+      (name, System.identityHashCode(df), System.identityHashCode(cached)).##
+  }
+
+  /** `sql` parsed by the session's parser with `tables` bound in, as an
+    * analyzed DataFrame, and the test of whether that DataFrame still
+    * answers the statement: false if a relation is neither a binding nor
+    * a CTE, or once a function it calls is registered anew. */
+  private def bind(
+      sql: String, tables: Seq[(String, DataFrame)]): (DataFrame, () => Boolean) = {
     val spark = tables.head._2.sparkSession
-    // snapshot any pre-existing temp views sharing a binding name, so the
-    // call doesn't clobber session state (the view's analyzed plan
-    // survives the drop and can be re-registered)
-    val shadowed = tables.flatMap { case (name, _) =>
-      val isTempView =
-        try spark.catalog.getTable(name).isTemporary
-        catch { case _: Exception => false } // absent or non-temp: nothing to restore
-      if (isTempView) {
-        val prior = spark.table(name)
-        prior.queryExecution.analyzed // force analysis before we replace it
-        Some(name -> prior)
-      } else None
+    val conf = spark.sessionState.conf
+    val resolver = conf.resolver
+    var closed = true
+    val calls = mutable.Set[Seq[String]]()
+
+    // a CTE name in scope shadows a binding of the same name
+    def walk(p: LogicalPlan, ctes: Seq[String]): LogicalPlan = {
+      p.expressions.foreach(_.foreach {
+        case f: UnresolvedFunction => calls += f.nameParts
+        case _ =>
+      })
+      p match {
+        case w: UnresolvedWith =>
+          val names = w.cteRelations.map(_._1)
+          val defs = w.cteRelations.zipWithIndex.map { case ((name, body, depth), i) =>
+            // a definition sees the earlier ones, and itself only if RECURSIVE
+            val visible = ctes ++ names.take(i) ++ Option.when(w.allowRecursion)(name)
+            (name, walk(body, visible).asInstanceOf[SubqueryAlias], depth)
+          }
+          w.copy(child = walk(w.child, ctes ++ names), cteRelations = defs)
+        case UnresolvedRelation(Seq(name), _, _) if ctes.exists(resolver(_, name)) => p
+        case UnresolvedRelation(Seq(name), _, _) =>
+          // the qualifier a temp view of that name would give its columns
+          val alias = if (conf.caseSensitiveAnalysis) name else name.toLowerCase(Locale.ROOT)
+          tables.collectFirst { case (n, df) if resolver(n, name) =>
+            SubqueryAlias(alias, df.queryExecution.commandExecuted)
+          }.getOrElse { closed = false; p }
+        case _: OneRowRelation | _: LocalRelation | _: UnresolvedInlineTable => p
+        case _: LeafNode => closed = false; p // a catalog relation, a TVF, …
+        case _ =>
+          p.mapChildren(walk(_, ctes)).transformExpressions {
+            case s: SubqueryExpression => s.withNewPlan(walk(s.plan, ctes))
+          }
+      }
     }
-    try {
-      tables.foreach { case (name, df) => df.createOrReplaceTempView(name) }
-      graft.sql.JoinNaming.disambiguate(
-        try spark.sql(Dialect.lower(sql))
-        catch {
-          // reference error contract (test_interface.py
-          // test_error_wrong_table_name): an unbound table raises the
-          // library's own exception, and the call is retryable after the
-          // failure (the finally below restores session state)
-          case e: org.apache.spark.sql.AnalysisException
-              if e.getCondition == "TABLE_OR_VIEW_NOT_FOUND" =>
-            throw new DfsqlException(
-              s"Unknown table ${e.messageParameters.getOrElse("relationName", "?")}")
-        })
-    } finally {
-      tables.foreach { case (name, _) => spark.catalog.dropTempView(name) }
-      shadowed.foreach { case (name, df) => df.createOrReplaceTempView(name) }
+
+    val df =
+      try graft.sql.JoinNaming.disambiguate(
+        CatalystBridge.sql(spark, Dialect.lower(sql))(walk(_, Nil)))
+      catch {
+        // reference error contract (test_interface.py
+        // test_error_wrong_table_name): an unbound table raises the
+        // library's own exception; nothing was registered, so a retry
+        // starts clean
+        case UnknownTable(name) => throw new DfsqlException(s"Unknown table $name")
+      }
+    val registry = spark.sessionState.functionRegistry
+    def builders = calls.toSeq.map {
+      case Seq(name) => registry.lookupFunctionBuilder(FunctionIdentifier(name))
+      case _ => None
     }
+    val used = builders // compared by reference: a new registration is a new builder
+    df -> (() => closed && !used.contains(None) && builders == used)
   }
 
   /** sqlQuery with the reference's reduce_output=True semantics: a 1×1

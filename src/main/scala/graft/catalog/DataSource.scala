@@ -6,11 +6,10 @@ import scala.reflect.runtime.universe.TypeTag
 
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
-import org.apache.spark.sql.catalyst.trees.TreePattern
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
 
-import graft.{CommandException, QueryExecutionException}
+import graft.{CommandException, QueryExecutionException, UnknownTable}
 import graft.commands.Commands
 import graft.sql.Dialect
 
@@ -86,20 +85,15 @@ final class DoNothingCache extends TableCache {
   * `maxsize`: beyond it, the least-recently-USED entry is unpersisted and
   * evicted (LinkedHashMap in access order via remove+reinsert on hit).
   *
-  * It also keeps the last `StatementBound` executed statement DataFrames
-  * (least-recently-used evicted), so a repeated SELECT reuses its AQE
-  * final plan, compiled code and materialized shuffle/broadcast stages
-  * and only its result stage runs again. Only statements whose analyzed
-  * plan, subqueries included, is deterministic and reads no current
-  * time/date/user are kept. A mutation of the owning catalog makes its
-  * older entries unreachable (the key carries the catalog version), and
-  * the next miss drops them; `invalidate` and `clear` drop every entry.
-  * A build that overlapped any of these is not kept. An evicted frame is
-  * only dereferenced, so the ContextCleaner removes its shuffle files. */
+  * It also keeps executed statement DataFrames in a `StatementLru`, so a
+  * repeated SELECT reruns only its result stage. A mutation of the owning
+  * catalog makes its older entries unreachable (the key carries the
+  * catalog version), and the next kept build drops them; `invalidate` and
+  * `clear` drop every entry. A build that overlapped any of these is not
+  * kept. */
 final class MemoryCache(maxsize: Option[Int] = None) extends TableCache {
   private val loaded = mutable.LinkedHashMap[String, DataFrame]()
-  private val statements = mutable.LinkedHashMap[StatementKey, DataFrame]()
-  private var dropped = 0L // bumped whenever statement entries are dropped
+  private val statements = new StatementLru[StatementKey]
   private var hitCount = 0L
   private var missCount = 0L
   def get(spark: SparkSession, t: FileTable): DataFrame = synchronized {
@@ -125,47 +119,19 @@ final class MemoryCache(maxsize: Option[Int] = None) extends TableCache {
   def clear(): Unit = synchronized {
     loaded.values.foreach(_.unpersist())
     loaded.clear()
-    dropStatements()
+    statements.clear()
     hitCount = 0; missCount = 0
   }
   override def invalidate(fpath: String): Unit = synchronized {
     loaded.remove(fpath).foreach(_.unpersist())
-    dropStatements() // any statement may read that path
+    statements.clear() // any statement may read that path
   }
-  private def dropStatements(): Unit = { statements.clear(); dropped += 1 }
 
-  override def statement(key: StatementKey)(build: => DataFrame): DataFrame = {
-    val (hit, stamp) = synchronized {
-      (statements.remove(key).map { df => statements(key) = df; df }, dropped)
-    }
-    hit.getOrElse {
-      val df = build
-      if (MemoryCache.reusable(df)) synchronized {
-        if (stamp == dropped && key.current) {
-          statements.filterInPlace((k, _) => k.current)
-          statements(key) = df
-          while (statements.size > MemoryCache.StatementBound)
-            statements.remove(statements.head._1)
-        }
-      }
-      df
-    }
-  }
+  override def statement(key: StatementKey)(build: => DataFrame): DataFrame =
+    statements(key)(build -> (() => key.current))
 
   /** (hits, misses, currentSize) — the cache_info() analog. */
   def info: (Long, Long, Int) = synchronized((hitCount, missCount, loaded.size))
-}
-
-object MemoryCache {
-  /** Executed statement frames kept per cache. */
-  val StatementBound = 64
-
-  /** Same rows on every run: no nondeterministic expression and no
-    * current time/date/user, in the plan or any subquery. */
-  private def reusable(df: DataFrame): Boolean =
-    df.queryExecution.analyzed.collectFirstWithSubqueries {
-      case p if !p.deterministic || p.containsPattern(TreePattern.CURRENT_LIKE) => p
-    }.isEmpty
 }
 
 /** The dfsql catalog facade over a SparkSession (reference:
@@ -428,11 +394,8 @@ class DataSource(
     // duplicate-output-name detection lives in JoinNaming.disambiguate
     try graft.sql.JoinNaming.disambiguate(spark.sql(lowered))
     catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "TABLE_OR_VIEW_NOT_FOUND" =>
-        // reference error contract (base_data_source.py:177-178)
-        throw new QueryExecutionException(
-          s"Unknown table ${e.messageParameters.getOrElse("relationName", "?")}")
+      // reference error contract (base_data_source.py:177-178)
+      case UnknownTable(name) => throw new QueryExecutionException(s"Unknown table $name")
     } finally {
       prevCase match {
         case Some(v) => spark.conf.set("spark.sql.caseSensitive", v)

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,6 +14,23 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sf0001 = "/root/testdata/sf0.001"
   def sf001 = "/root/testdata/sf0.01"
+
+  /** Listener-counted jobs and compiled codegen classes of `body`. */
+  def jobsAndCompiles[A](body: => A): (A, Int, Long) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    try {
+      val a = body
+      org.apache.spark.ListenerBusDrain(sc)
+      (a, jobs.get, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0)
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {

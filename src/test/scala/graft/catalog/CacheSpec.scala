@@ -91,25 +91,6 @@ class CacheSpec extends SparkSpec {
 
   private def rows(df: DataFrame): Seq[Row] = df.collect().toSeq
 
-  /** Listener-counted jobs and compiled codegen classes of `body`. */
-  private def jobsAndCompiles[A](body: => A): (A, Int, Long) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import org.apache.spark.metrics.source.CodegenMetrics
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
-    org.apache.spark.ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    try {
-      val a = body
-      org.apache.spark.ListenerBusDrain(sc)
-      (a, jobs.get, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0)
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("statement cache: a repeated join+aggregate reruns only its result " +
     "stage and compiles nothing") {
     val dir = Files.createTempDirectory("graft_stmt_hit")
@@ -182,7 +163,7 @@ class CacheSpec extends SparkSpec {
     // re-added under the same name with other rows
     ds.dropTable("t")
     val e = intercept[QueryExecutionException](ds.queryDF(count))
-    assert(e.getMessage.startsWith("Unknown table") && e.getMessage.contains("t"))
+    assert(e.getMessage === "Unknown table t")
     val other = Files.createTempDirectory("graft_stmt_other")
     ds.addTable(FileTable("t", csv(other, "t", "a\n7\n8\n9\n")))
     assert(rows(ds.queryDF(count)) === Seq(Row(3L)))
@@ -235,9 +216,9 @@ class CacheSpec extends SparkSpec {
   test("statement cache: the bound evicts the least-recently-used statement") {
     val (ds, _) = fixture()
     def stmt(k: Int) = s"SELECT a + $k AS v FROM t"
-    val first = (0 until MemoryCache.StatementBound).map(k => ds.queryDF(stmt(k)))
+    val first = (0 until StatementLru.Bound).map(k => ds.queryDF(stmt(k)))
     assert(ds.queryDF(stmt(0)) eq first(0)) // all held; s0 now most recently used
-    ds.queryDF(stmt(MemoryCache.StatementBound))
+    ds.queryDF(stmt(StatementLru.Bound))
     assert(ds.queryDF(stmt(0)) eq first(0))
     assert(ds.queryDF(stmt(2)) eq first(2))
     assert(ds.queryDF(stmt(1)) ne first(1)) // the least recently used went
