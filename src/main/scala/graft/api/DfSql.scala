@@ -2,13 +2,8 @@ package graft.api
 
 import java.util.Locale
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.{UnresolvedFunction, UnresolvedInlineTable, UnresolvedRelation}
-import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
-import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LocalRelation, LogicalPlan, OneRowRelation, SubqueryAlias, UnresolvedWith}
+import org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias
 import org.apache.spark.sql.graft.CatalystBridge
 
 import graft.{DfsqlException, UnknownTable}
@@ -28,7 +23,9 @@ import graft.sql.Dialect
   * materialization: the plans (and their pushdowns) stay distributed.
   *
   * A repeated call gets the executed DataFrame of the earlier one (a
-  * `StatementLru`), so only its result stage runs again. The key is the
+  * `StatementLru`), so only its result stage runs again; once that one
+  * ran, a small result is kept as rows and later repeats run no Spark
+  * job. The key is the
   * final SQL text, the binding names, the bound DataFrames by reference
   * and the session's explicitly-set confs. A DataFrame is kept and served
   * only while every bound DataFrame is persisted (the same cache entry as
@@ -83,64 +80,30 @@ object DfSql {
 
   /** `sql` parsed by the session's parser with `tables` bound in, as an
     * analyzed DataFrame, and the test of whether that DataFrame still
-    * answers the statement: false if a relation is neither a binding nor
-    * a CTE, or once a function it calls is registered anew. */
+    * answers the statement (`StatementLru.analyze`): false if a relation is
+    * neither a binding nor a CTE, or once a function it calls is
+    * registered anew. */
   private def bind(
       sql: String, tables: Seq[(String, DataFrame)]): (DataFrame, () => Boolean) = {
     val spark = tables.head._2.sparkSession
     val conf = spark.sessionState.conf
-    val resolver = conf.resolver
-    var closed = true
-    val calls = mutable.Set[Seq[String]]()
-
-    // a CTE name in scope shadows a binding of the same name
-    def walk(p: LogicalPlan, ctes: Seq[String]): LogicalPlan = {
-      p.expressions.foreach(_.foreach {
-        case f: UnresolvedFunction => calls += f.nameParts
-        case _ =>
-      })
-      p match {
-        case w: UnresolvedWith =>
-          val names = w.cteRelations.map(_._1)
-          val defs = w.cteRelations.zipWithIndex.map { case ((name, body, depth), i) =>
-            // a definition sees the earlier ones, and itself only if RECURSIVE
-            val visible = ctes ++ names.take(i) ++ Option.when(w.allowRecursion)(name)
-            (name, walk(body, visible).asInstanceOf[SubqueryAlias], depth)
-          }
-          w.copy(child = walk(w.child, ctes ++ names), cteRelations = defs)
-        case UnresolvedRelation(Seq(name), _, _) if ctes.exists(resolver(_, name)) => p
-        case UnresolvedRelation(Seq(name), _, _) =>
-          // the qualifier a temp view of that name would give its columns
-          val alias = if (conf.caseSensitiveAnalysis) name else name.toLowerCase(Locale.ROOT)
-          tables.collectFirst { case (n, df) if resolver(n, name) =>
-            SubqueryAlias(alias, df.queryExecution.commandExecuted)
-          }.getOrElse { closed = false; p }
-        case _: OneRowRelation | _: LocalRelation | _: UnresolvedInlineTable => p
-        case _: LeafNode => closed = false; p // a catalog relation, a TVF, …
-        case _ =>
-          p.mapChildren(walk(_, ctes)).transformExpressions {
-            case s: SubqueryExpression => s.withNewPlan(walk(s.plan, ctes))
-          }
+    try {
+      val (df, current) = StatementLru.analyze(spark, Dialect.lower(sql)) { r =>
+        val name = r.multipartIdentifier.head
+        // the qualifier a temp view of that name would give its columns
+        val alias = if (conf.caseSensitiveAnalysis) name else name.toLowerCase(Locale.ROOT)
+        tables.collectFirst { case (n, df) if conf.resolver(n, name) =>
+          SubqueryAlias(alias, df.queryExecution.commandExecuted)
+        }
       }
+      graft.sql.JoinNaming.disambiguate(df) -> current
+    } catch {
+      // reference error contract (test_interface.py
+      // test_error_wrong_table_name): an unbound table raises the
+      // library's own exception; nothing was registered, so a retry
+      // starts clean
+      case UnknownTable(name) => throw new DfsqlException(s"Unknown table $name")
     }
-
-    val df =
-      try graft.sql.JoinNaming.disambiguate(
-        CatalystBridge.sql(spark, Dialect.lower(sql))(walk(_, Nil)))
-      catch {
-        // reference error contract (test_interface.py
-        // test_error_wrong_table_name): an unbound table raises the
-        // library's own exception; nothing was registered, so a retry
-        // starts clean
-        case UnknownTable(name) => throw new DfsqlException(s"Unknown table $name")
-      }
-    val registry = spark.sessionState.functionRegistry
-    def builders = calls.toSeq.map {
-      case Seq(name) => registry.lookupFunctionBuilder(FunctionIdentifier(name))
-      case _ => None
-    }
-    val used = builders // compared by reference: a new registration is a new builder
-    df -> (() => closed && !used.contains(None) && builders == used)
   }
 
   /** sqlQuery with the reference's reduce_output=True semantics: a 1×1

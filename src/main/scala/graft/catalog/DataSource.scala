@@ -8,6 +8,7 @@ import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
+import org.apache.spark.sql.internal.SQLConf
 
 import graft.{CommandException, QueryExecutionException, UnknownTable}
 import graft.commands.Commands
@@ -71,8 +72,9 @@ sealed trait TableCache {
   /** Drop one path's entry (table dropped / its file overwritten). */
   def invalidate(fpath: String): Unit = ()
   /** The DataFrame of the SELECT `key` names: `build`'s, or one an
-    * earlier call with an equal key built. */
-  def statement(key: StatementKey)(build: => DataFrame): DataFrame = build
+    * earlier call with an equal key built. `build` gives the DataFrame and
+    * the test of whether it still answers the statement. */
+  def statement(key: StatementKey)(build: => (DataFrame, () => Boolean)): DataFrame = build._1
 }
 /** reference: cache.py:12 DoNothingCache — re-plan every access. */
 final class DoNothingCache extends TableCache {
@@ -86,11 +88,16 @@ final class DoNothingCache extends TableCache {
   * evicted (LinkedHashMap in access order via remove+reinsert on hit).
   *
   * It also keeps executed statement DataFrames in a `StatementLru`, so a
-  * repeated SELECT reruns only its result stage. A mutation of the owning
-  * catalog makes its older entries unreachable (the key carries the
-  * catalog version), and the next kept build drops them; `invalidate` and
-  * `clear` drop every entry. A build that overlapped any of these is not
-  * kept. */
+  * repeated SELECT reruns only its result stage, and a small result is
+  * kept as rows, so its later repeats run no Spark job. An entry is
+  * served only while every relation of its statement is one of the
+  * catalog's tables, a CTE, `VALUES` or a FROM-less row and every
+  * function it calls keeps its registration (a session view or a UDF
+  * re-registered outside the catalog is read afresh). A mutation of the
+  * owning catalog makes its older entries unreachable (the key carries
+  * the catalog version), and the next kept build drops them;
+  * `invalidate`, `clear` and a `maxsize` eviction drop every entry. A
+  * build that overlapped any of these is not kept. */
 final class MemoryCache(maxsize: Option[Int] = None) extends TableCache {
   private val loaded = mutable.LinkedHashMap[String, DataFrame]()
   private val statements = new StatementLru[StatementKey]
@@ -111,6 +118,7 @@ final class MemoryCache(maxsize: Option[Int] = None) extends TableCache {
             val (oldPath, oldDf) = loaded.head
             oldDf.unpersist()
             loaded.remove(oldPath)
+            statements.clear() // as invalidate: any statement may read it
           }
         }
         df
@@ -127,8 +135,11 @@ final class MemoryCache(maxsize: Option[Int] = None) extends TableCache {
     statements.clear() // any statement may read that path
   }
 
-  override def statement(key: StatementKey)(build: => DataFrame): DataFrame =
-    statements(key)(build -> (() => key.current))
+  override def statement(key: StatementKey)(build: => (DataFrame, () => Boolean)): DataFrame =
+    statements(key) {
+      val (df, current) = build
+      df -> (() => key.current && current())
+    }
 
   /** (hits, misses, currentSize) — the cache_info() analog. */
   def info: (Long, Long, Int) = synchronized((hitCount, missCount, loaded.size))
@@ -353,11 +364,16 @@ class DataSource(
     *
     * Under MemoryCache a returned DataFrame may be shared between calls:
     * a repeated deterministic SELECT gives the DataFrame an earlier call
-    * built. The reuse key is the SQL text as received, this catalog's
-    * version and the session's explicitly-set confs (`spark.conf.getAll`).
-    * The version moves on addTable, dropTable, saveTable/CTAS, setCache,
-    * loadMetadata, registerFunction, registerFunction2 and
-    * registerAggregate; MemoryCache.invalidate/clear drop every entry. */
+    * built, or, once that one ran and its result is small, a DataFrame
+    * over the same rows whose collection runs no Spark job. The reuse key
+    * is the SQL text as received, this catalog's version and the
+    * session's explicitly-set confs (`spark.conf.getAll`). The version
+    * moves on addTable, dropTable, saveTable/CTAS, setCache, loadMetadata,
+    * registerFunction, registerFunction2 and registerAggregate;
+    * MemoryCache.invalidate/clear and its maxsize evictions drop every
+    * entry. A statement that reads a relation outside the catalog (a
+    * session view, a table of the session catalog, a table function) is
+    * never reused, nor one whose functions were registered anew since. */
   def query(sql: String, reduceOutput: Boolean = false): QueryResult = {
     Commands.tryParse(sql) match {
       case Some(cmd) => cmd.execute(this)
@@ -368,7 +384,11 @@ class DataSource(
     }
   }
 
-  private def analyze(sql: String): DataFrame = {
+  /** The statement's DataFrame and the test of whether it still answers
+    * the statement (`StatementLru.analyze`): false if a relation is not one
+    * of this catalog's tables, a CTE, `VALUES` or a FROM-less row, or once
+    * a function it calls is registered anew. */
+  private def analyze(sql: String): (DataFrame, () => Boolean) = {
     val lowered = Dialect.lower(sql)
     // (re-)register views for the tables THIS statement references:
     // restores isolation between DataSources sharing a session (each
@@ -385,22 +405,21 @@ class DataSource(
       if (words.contains(t.name.toLowerCase)) registerView(t)
     }
     // honor the reference's case-sensitivity flag for COLUMN lookup
-    // too (utils.py:87-167): Spark's conf is session-global, so pin
-    // it for the analysis of this statement and restore after (unset if
-    // it was unset: getOption would give the default, and setting that
-    // would change the session's explicit confs, the statement key).
-    val prevCase = spark.conf.getAll.get("spark.sql.caseSensitive")
-    spark.conf.set("spark.sql.caseSensitive", caseSensitive)
+    // too (utils.py:87-167), for this statement's analysis only: it runs
+    // under a copy of the session's conf with the flag set, so the
+    // session's explicit confs (the statement key) and statements
+    // analyzed on other threads never see it
+    val conf = spark.sessionState.conf.clone()
+    conf.setConf(SQLConf.CASE_SENSITIVE, caseSensitive)
     // duplicate-output-name detection lives in JoinNaming.disambiguate
-    try graft.sql.JoinNaming.disambiguate(spark.sql(lowered))
-    catch {
+    try SQLConf.withExistingConf(conf) {
+      val (df, current) = StatementLru.analyze(spark, lowered) { r =>
+        Option.when(contains(r.multipartIdentifier.head))(r)
+      }
+      graft.sql.JoinNaming.disambiguate(df) -> current
+    } catch {
       // reference error contract (base_data_source.py:177-178)
       case UnknownTable(name) => throw new QueryExecutionException(s"Unknown table $name")
-    } finally {
-      prevCase match {
-        case Some(v) => spark.conf.set("spark.sql.caseSensitive", v)
-        case None => spark.conf.unset("spark.sql.caseSensitive")
-      }
     }
   }
 

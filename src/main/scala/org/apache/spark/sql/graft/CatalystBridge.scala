@@ -1,10 +1,11 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.QueryPlanningTracker
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.{InternalRow, QueryPlanningTracker}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, CodegenObjectFactoryMode, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.classic.{ClassicConversions, Dataset, ExpressionUtils}
+import org.apache.spark.sql.internal.SQLConf
 
 /** Spark 4's Column⇄Expression converters and its plan→DataFrame factory
   * are private[sql]; this bridge lives inside the org.apache.spark.sql
@@ -25,6 +26,19 @@ object CatalystBridge {
         session.sessionState.sqlParser.parsePlan(sqlText))
       Dataset.ofRows(session, rewrite(parsed), tracker)
     }
+  }
+
+  /** A DataFrame over `rows`, laid out as `output`, with its physical
+    * rows prepared: collecting it runs no Spark job and compiles nothing.
+    * The scan's one row projection runs interpreted, here: compiling it
+    * would cost a compile per output schema for a small local result. */
+  def local(spark: SparkSession, output: Seq[Attribute], rows: Seq[InternalRow]): DataFrame = {
+    val session = ClassicConversions.castToImpl(spark)
+    val df = Dataset.ofRows(session, LocalRelation(output, rows))
+    val conf = session.sessionState.conf.clone()
+    conf.setConf(SQLConf.CODEGEN_FACTORY_MODE, CodegenObjectFactoryMode.NO_CODEGEN)
+    SQLConf.withExistingConf(conf)(df.queryExecution.executedPlan.executeCollect())
+    df
   }
 
   /** The cache entry `df` reads when it is persisted: one object from

@@ -224,6 +224,46 @@ class CacheSpec extends SparkSpec {
     assert(ds.queryDF(stmt(1)) ne first(1)) // the least recently used went
   }
 
+  test("statement cache: a function re-registered outside the catalog is " +
+    "seen by the next identical statement") {
+    val (ds, _) = fixture()
+    val sql = "SELECT stale_f(a) AS v FROM t ORDER BY v"
+    try {
+      spark.udf.register("stale_f", (a: Int) => a + 1)
+      (1 to 3).foreach(_ => assert(rows(ds.queryDF(sql)) === Seq(Row(2), Row(3))))
+      spark.udf.register("stale_f", (a: Int) => a * 100)
+      assert(rows(ds.queryDF(sql)) === Seq(Row(100), Row(200)))
+    } finally spark.sql("DROP TEMPORARY FUNCTION IF EXISTS stale_f")
+  }
+
+  test("statement cache: a session view outside the catalog is read afresh " +
+    "by the next identical statement") {
+    import spark.implicits._
+    val (ds, _) = fixture()
+    val sql = "SELECT count(*) AS n FROM t WHERE a IN (SELECT k FROM stale_v)"
+    try {
+      Seq(1).toDF("k").createOrReplaceTempView("stale_v")
+      (1 to 3).foreach(_ => assert(rows(ds.queryDF(sql)) === Seq(Row(1L))))
+      Seq(1, 2).toDF("k").createOrReplaceTempView("stale_v")
+      assert(rows(ds.queryDF(sql)) === Seq(Row(2L)))
+    } finally spark.catalog.dropTempView("stale_v")
+  }
+
+  test("statement cache: a maxsize eviction makes the next identical statement miss") {
+    val dir = Files.createTempDirectory("graft_stmt_evict")
+    val ds = new DataSource(spark, dir.toString, initialCache = new MemoryCache(maxsize = Some(1)))
+    ds.addTableFromFile(csv(dir, "t1", "a\n1\n2\n"))
+    ds.addTableFromFile(csv(dir, "t2", "a\n5\n"))
+    val sql = "SELECT sum(a) AS s FROM t1"
+    ds.queryDF(sql) // reads t1 back in, evicting t2: not kept
+    val held = ds.queryDF(sql)
+    assert(ds.queryDF(sql) eq held)
+    ds.table("t2") // evicts t1
+    val after = ds.queryDF(sql)
+    assert(after ne held)
+    assert(rows(after) === Seq(Row(3L)))
+  }
+
   test("statement cache: 4 threads of mixed hits and misses on one catalog " +
     "give no wrong rows") {
     val dir = Files.createTempDirectory("graft_stmt_threads")

@@ -323,4 +323,40 @@ class DataSourceSpec extends SparkSpec {
     scanned.dropTable("titanic")
     assert(Files.exists(data.resolve("titanic.csv")))
   }
+
+  test("regression: catalogs that differ in case sensitivity, analyzed from " +
+    "4 threads, give no wrong rows and leave the session conf unset") {
+    val key = "spark.sql.caseSensitive"
+    assert(spark.conf.getAll.get(key).isEmpty)
+    val (strict, loose) = (tmpDir(), tmpDir())
+    val exact = new DataSource(spark, strict.toString, initialCache = new DoNothingCache)
+    exact.addTableFromFile(titanicCsv(strict))
+    val any = new DataSource(spark, loose.toString, caseSensitive = false,
+      initialCache = new DoNothingCache)
+    any.addTableFromFile(titanicCsv(loose))
+    val wrong = new java.util.concurrent.atomic.AtomicInteger
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      (0 until 4).foreach { th =>
+        pool.submit(new Runnable {
+          def run(): Unit = (0 until 40).foreach { i =>
+            val ok =
+              try {
+                if (th % 2 == 0)
+                  any.queryDF("SELECT count(*) AS N FROM TITANIC WHERE AGE > 30")
+                    .head.getLong(0) == 4L
+                else // a mixed-case column must not resolve under case-sensitive analysis
+                  scala.util.Try(exact.queryDF("SELECT Age FROM titanic").collect()).isFailure
+              } catch { case _: Exception => false }
+            if (!ok) wrong.incrementAndGet()
+          }
+        })
+      }
+    } finally {
+      pool.shutdown()
+      assert(pool.awaitTermination(5, java.util.concurrent.TimeUnit.MINUTES))
+    }
+    assert(wrong.get === 0)
+    assert(spark.conf.getAll.get(key).isEmpty)
+  }
 }
