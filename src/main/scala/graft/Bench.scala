@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 object Bench {
 
@@ -252,33 +252,22 @@ object Bench {
     }.getOrElse(0)
   }
 
-  def main(args: Array[String]): Unit = {
-    // fail fast on a renamed/unregistered headline query — flatMap below
-    // would otherwise silently drop it from the driver-parsed line
-    val missing = headline.filterNot(SparkEntry.queries.contains)
-    require(missing.isEmpty, s"headline names not registered: $missing")
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Wall-clock budget (seconds) for the WHOLE run, warm-up included.
-    // The driver's bench timeout is not published; r8's valid run took
-    // 6m30s and its first boot survived ~10 min, so 8 minutes is inside
-    // the proven-safe window with margin for a slow boot.
-    val budgetSec =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_SEC", "480").toDouble
-    val benchT0 = System.nanoTime()
-    def remaining: Double = budgetSec - (System.nanoTime() - benchT0) / 1e9
-    // Shuffle partitions = cpus/2, floor 8: partitions should be sized to
-    // the DATA (sf0.1 is tens of MB — 32 shuffle tasks are pure scheduler
-    // overhead per stage), and the probe (tools.PartProbe, r8 boot)
-    // measured 16 partitions ~10% faster than 32 across a 12-query
-    // representative set on two repeats. At real scale this knob tracks
-    // input size / executor count, not local thread count.
-    val parts = math.max(8, cpus.toInt / 2)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+  /** The data Bench and tools.Trace read unless told otherwise. */
+  private[graft] def defaultSfDir: String =
+    sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  /** Shuffle partitions = cpus/2, floor 8: partitions should be sized to
+    * the DATA (sf0.1 is tens of MB — 32 shuffle tasks are pure scheduler
+    * overhead per stage), and a probe on the r8 boot measured 16
+    * partitions ~10% faster than 32 across a 12-query representative set
+    * on two repeats. At real scale this knob tracks input size /
+    * executor count, not local thread count. */
+  private[graft] def partitions(cores: Int): Int = math.max(8, cores / 2)
+
+  /** Bench's session. tools.Trace runs under the same one, so a Trace
+    * number is a Bench number. */
+  private[graft] def session(cores: Int, partitions: Int): SparkSession =
+    Sessions.local(cores, partitions, configure =
       // Whole-stage-codegen compile cache (static conf, default 100
       // entries). 161 registered queries × several codegen stages each
       // evict constantly at 100, so BOTH samples of every query pay
@@ -287,9 +276,62 @@ object Bench {
       // "regressions" appeared exactly when the suite grew 108→161.
       // Standard tuning for a many-distinct-query workload, same knob
       // you'd set on a shared cluster.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      _.config("spark.sql.codegen.cache.maxEntries", "4096"))
+
+  /** One timed sample, shared by Bench and tools.Trace: build the frame
+    * and `count()` it, timed from the call. Returns the seconds and the
+    * row count, or what the sample threw.
+    *
+    * ADVICE r14 #1: the unpersist afterwards is scoped to RDDs persisted
+    * DURING this sample. Anything persisted before the sample started (a
+    * lazy-val store, a cached index) survives.
+    *
+    * Why free the sample's materialized blocks NOW (r14 harness
+    * hygiene): localCheckpoint/persist blocks are otherwise reclaimed
+    * only after driver GC + ContextCleaner lag, and over a 350-query
+    * suite the backlog inflated mid/tail queries 2-4× (q182: 8.65 s
+    * in-suite vs 2.3 s isolated-warm — pure storage pressure from PRIOR
+    * queries' blocks). Queries never share persisted RDDs across
+    * invocations (Staging caches are disk dirs; the catalog MemoryCache
+    * keeps lineage, so a later hit just recomputes), so dropping them
+    * between samples is safe and makes each sample measure the QUERY,
+    * not the suite's history. The unpersist wall-time is excluded from
+    * the sample (measured: ~ms), exactly like Bench's GC nudge. */
+  private[graft] def timedCount(spark: SparkSession, build: => DataFrame,
+      unpersist: Boolean = true): Either[Throwable, (Double, Long)] = {
+    val preexisting =
+      try spark.sparkContext.getPersistentRDDs.keySet
+      catch { case _: Throwable => Set.empty[Int] }
+    val t0 = System.nanoTime()
+    val counted = try Right(build.count()) catch { case t: Throwable => Left(t) }
+    val elapsed = (System.nanoTime() - t0) / 1e9
+    if (unpersist)
+      try unpersistSince(spark, preexisting) catch { case _: Throwable => }
+    counted.map(rows => (elapsed, rows))
+  }
+
+  /** Unpersist every RDD persisted after `preexisting` was read. */
+  private[graft] def unpersistSince(spark: SparkSession, preexisting: collection.Set[Int]): Unit =
+    spark.sparkContext.getPersistentRDDs
+      .filterNot { case (id, _) => preexisting.contains(id) }
+      .values.foreach(_.unpersist(blocking = false))
+
+  def main(args: Array[String]): Unit = {
+    // fail fast on a renamed/unregistered headline query — flatMap below
+    // would otherwise silently drop it from the driver-parsed line
+    val missing = headline.filterNot(SparkEntry.queries.contains)
+    require(missing.isEmpty, s"headline names not registered: $missing")
+    val sfDir = defaultSfDir
+    val cpus = Sessions.cores(4)
+    // Wall-clock budget (seconds) for the WHOLE run, warm-up included.
+    // The driver's bench timeout is not published; r8's valid run took
+    // 6m30s and its first boot survived ~10 min, so 8 minutes is inside
+    // the proven-safe window with margin for a slow boot.
+    val budgetSec =
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_SEC", "480").toDouble
+    val benchT0 = System.nanoTime()
+    def remaining: Double = budgetSec - (System.nanoTime() - benchT0) / 1e9
+    val spark = session(cpus, partitions(cpus))
     // JVM/codegen warmup outside the timed region: without this the
     // (randomly) first query absorbs ~2s of classloading + codegen cost.
     try {
@@ -380,47 +422,17 @@ object Bench {
         // periodic nudge keeps the suite's tail honest.
         sinceGc += 1
         val tq0 = System.nanoTime()
-        def sample(): Option[Double] = {
-          // ADVICE r14 #1: scope the between-sample unpersist to RDDs
-          // persisted DURING this sample. Today the snapshot is empty
-          // (the previous sample already cleaned up), so behavior is
-          // identical — but a future legitimately cross-invocation
-          // cache (a lazy-val store, a cached index) can no longer be
-          // yanked out from under a query mid-bench: anything persisted
-          // before the sample started survives.
-          val preexisting =
-            try spark.sparkContext.getPersistentRDDs.keySet
-            catch { case _: Throwable => Set.empty[Int] }
-          val t0 = System.nanoTime()
-          val ok = try { fn(spark, sfDir).count(); true } catch {
-            case t: Throwable =>
+        def sample(): Option[Double] =
+          timedCount(spark, fn(spark, sfDir), unpersist = !noUnpersist) match {
+            case Right((elapsed, _)) => Some(elapsed)
+            // a throw's elapsed time is not a measurement — reporting it
+            // would make a broken query look fast in the queries map / total
+            case Left(t) =>
               failed += name
               System.err.println(s"[bench] FAILED $name: $t")
               t.getStackTrace.take(8).foreach(f => System.err.println(s"[bench]   at $f"))
-              false
+              None
           }
-          val elapsed = (System.nanoTime() - t0) / 1e9
-          // Free the sample's materialized blocks NOW (r14 harness
-          // hygiene): localCheckpoint/persist blocks are otherwise
-          // reclaimed only after driver GC + ContextCleaner lag, and over
-          // a 350-query suite the backlog inflated mid/tail queries 2-4×
-          // (q182: 8.65 s in-suite vs 2.3 s isolated-warm — pure storage
-          // pressure from PRIOR queries' blocks). Queries never share
-          // persisted RDDs across invocations (Staging caches are disk
-          // dirs; the catalog MemoryCache keeps lineage, so a later hit
-          // just recomputes), so dropping everything between samples is
-          // safe and makes each sample measure the QUERY, not the
-          // suite's history. The unpersist wall-time is excluded from
-          // the sample (measured: ~ms), exactly like the GC nudge below.
-          if (!noUnpersist)
-            try spark.sparkContext.getPersistentRDDs
-              .filterNot { case (id, _) => preexisting.contains(id) }
-              .values.foreach(_.unpersist(blocking = false))
-            catch { case _: Throwable => }
-          // a throw's elapsed time is not a measurement — reporting it
-          // would make a broken query look fast in the queries map / total
-          if (ok) Some(elapsed) else None
-        }
         val first = sample()
         // the periodic nudge runs BETWEEN a query's samples: the second
         // sample (usually the min) then measures with reclaimed storage

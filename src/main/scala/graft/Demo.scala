@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-
 import graft.api.DfSql
 import graft.api.DfSql.SqlOps
 import graft.catalog.DataSource
@@ -12,13 +10,8 @@ import graft.catalog.DataSource
   * one-shot API + df.sql accessor. Run: sbt "runMain graft.Demo" */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions) // injects rolling_hash & co.
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(4, 4,
+      configure = _.withExtensions(new GraftExtensions)) // injects rolling_hash & co.
 
     val dir = Files.createTempDirectory("graft_demo")
     val csv = dir.resolve("people.csv")

@@ -1,19 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local smoke runner mirroring the driver's t1 check: SparkEntry.entry
   * must return >0 rows on sf0.001. Prints the row count and the plan.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(4, 4)
     val df = SparkEntry.entry(spark)
     val rows = df.collect()
     println(s"[smoke] entry rows=${rows.length}")

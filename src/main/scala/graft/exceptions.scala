@@ -10,6 +10,11 @@ class DfsqlException(msg: String) extends RuntimeException(msg)
 class CommandException(msg: String) extends DfsqlException(msg)
 class QueryExecutionException(msg: String) extends DfsqlException(msg)
 
+/** `graft.materialize` holds a value that names no strategy. */
+class MaterializeStrategyException(value: String) extends DfsqlException(
+  s"graft.materialize=$value is not a materialization strategy; " +
+    s"expected one of ${graft.operators.Materialize.Strategies.mkString(", ")}")
+
 /** The table an analysis failed to find, as the statement named it:
   * Spark quotes `relationName` (`` `t` ``), the reference's
   * `Unknown table t` does not. */

@@ -1408,10 +1408,6 @@ object Dedup {
     * shape — Kiveris et al., "Connected components in MapReduce and
     * beyond", SoCC 2014.)
     */
-  /** Probe-iteration count of the most recent [[connectedComponents]]
-    * run (2 propagation steps each) — profiling visibility only. */
-  @volatile private[graft] var ccRoundsLastRun: Int = 0
-
   def connectedComponents(pairs: DataFrame, maxRounds: Int = 50): DataFrame = {
     // Symmetrize in ONE pass over the pair plan (explode of the two
     // directed copies): a union would read the — possibly expensive,
@@ -1481,7 +1477,6 @@ object Dedup {
       labels = updated
       rounds += 1
     }
-    ccRoundsLastRun = rounds
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxRounds rounds — " +

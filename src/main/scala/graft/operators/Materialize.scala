@@ -44,18 +44,24 @@ object Materialize {
   /** Runtime-conf key; values: local | reliable | persist. */
   val ConfKey = "graft.materialize"
 
-  def once(df: DataFrame): DataFrame = {
-    val strategy =
-      try df.sparkSession.conf.get(ConfKey, "local")
-      catch { case _: Throwable => "local" }
-    strategy match {
-      case "reliable" => df.checkpoint()
-      case "persist" =>
-        val p = df.persist(StorageLevel.DISK_ONLY_2)
-        p.count()
-        p
-      case _ => df.localCheckpoint()
-    }
+  val Strategies: Seq[String] = Seq("local", "reliable", "persist")
+
+  /** The configured strategy. Any other value fails: a typo such as
+    * `reliabel` must not quietly fall back to the non-fault-tolerant
+    * `local`. */
+  private def strategy(df: DataFrame): String = {
+    val s = df.sparkSession.conf.get(ConfKey, "local")
+    if (!Strategies.contains(s)) throw new graft.MaterializeStrategyException(s)
+    s
+  }
+
+  def once(df: DataFrame): DataFrame = strategy(df) match {
+    case "reliable" => df.checkpoint()
+    case "persist" =>
+      val p = df.persist(StorageLevel.DISK_ONLY_2)
+      p.count()
+      p
+    case _ => df.localCheckpoint()
   }
 
   /** Like `once`, but GUARANTEES a lineage cut. `persist(DISK_ONLY_2)`
@@ -66,14 +72,9 @@ object Materialize {
     * must call this instead: under `persist` it falls back to
     * `localCheckpoint` (cuts lineage; single-copy, same loss risk as
     * `local` but never *wrong*), the other strategies already cut. */
-  def cut(df: DataFrame): DataFrame = {
-    val strategy =
-      try df.sparkSession.conf.get(ConfKey, "local")
-      catch { case _: Throwable => "local" }
-    strategy match {
-      case "reliable" => df.checkpoint()
-      case _          => df.localCheckpoint()
-    }
+  def cut(df: DataFrame): DataFrame = strategy(df) match {
+    case "reliable" => df.checkpoint()
+    case _          => df.localCheckpoint()
   }
 
   /** Postfix form so call sites keep reading like the plan they build:

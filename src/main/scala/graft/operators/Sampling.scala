@@ -547,7 +547,7 @@ object Sampling {
     // the per-source frame feeds every downstream consumer (totals,
     // ranking, the cut, shares, the leftover level) — without a hard
     // lineage cut each one re-derives it from the CALLER'S plan, i.e.
-    // re-scans the corpus: the ExplainAudit first cut showed 8 full
+    // re-scans the corpus: the first plan audit showed 8 full
     // table scans for a |sources|-row computation (rule 5)
     val base = perSource.select(col("source"),
       col("avail").cast(dec).as("a"), col("weight").cast(dec).as("w"))

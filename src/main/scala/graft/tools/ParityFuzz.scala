@@ -458,13 +458,7 @@ object FuzzDump {
     val outDir = args.lift(1).getOrElse("/tmp/graft_fuzz")
     val seed = args.lift(2).map(_.toLong).getOrElse(GateSeed)
     val n = args.lift(3).map(_.toInt).getOrElse(GateN)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(graft.Sessions.cores(4), 4)
     val (failedNames, sqls) = dumpCases(spark, sfDir, outDir, seed, n)
     val failed = failedNames.size
     def esc(s: String): String = s.flatMap {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
-/** Final-plan inspection helpers shared by the ExplainAudit tool and the
+/** Final-plan inspection helpers shared by `tools.Trace --plan` and the
   * plan-property regression specs. All functions operate on the FINAL
   * adaptive plan: callers must run an action on the same QueryExecution
   * first (df.collect(), not count()/foreach() which build new ones).

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.operators.Dedup
 
 /** Ad-hoc check: do the candidates→verify dedup variants reproduce the
@@ -9,11 +7,7 @@ import graft.operators.Dedup
   * attaching the exact-Jaccard oracle to the LSH/SimHash queries.) */
 object RecallCheck {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local(8, 8, "ERROR")
     for (sf <- Seq("sf0.01", "sf0.1")) {
       val d = s"/root/testdata/$sf"
       val docs = graft.Tables.load(spark, d, "documents")

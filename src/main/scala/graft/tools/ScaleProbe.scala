@@ -125,25 +125,18 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(500000L)
     val out = args.lift(1).getOrElse("/tmp/graft_scale_probe")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.session.timeZone", "UTC")
-      // partitions sized to DATA, not thread count — the repo's own
-      // 100 TB rule applied to its own probe: the shingle explode is
-      // ~58 rows/doc, and a fixed 32 partitions lets per-task hash
-      // aggregation state outgrow the execution-memory share above
-      // ~1M docs (observed UNABLE_TO_ACQUIRE_MEMORY at n=2M under an
-      // 8g heap). ~15k docs/partition keeps each task's working set
-      // flat no matter how far n scales.
-      .config("spark.sql.shuffle.partitions",
-        math.max(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
-          (n / 15000L).toInt).toString)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      // heap comes from the forked JVM (build.sbt -Xmx via
-      // SPARK_DRIVER_MEM); spark.driver.memory is a no-op in-process
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cores = graft.Sessions.cores(32)
+    // partitions sized to DATA, not thread count — the repo's own
+    // 100 TB rule applied to its own probe: the shingle explode is
+    // ~58 rows/doc, and a fixed 32 partitions lets per-task hash
+    // aggregation state outgrow the execution-memory share above
+    // ~1M docs (observed UNABLE_TO_ACQUIRE_MEMORY at n=2M under an
+    // 8g heap). ~15k docs/partition keeps each task's working set
+    // flat no matter how far n scales. The heap comes from the forked
+    // JVM (build.sbt -Xmx via SPARK_DRIVER_MEM); spark.driver.memory is
+    // a no-op in-process.
+    val spark = graft.Sessions.local(cores, math.max(cores, (n / 15000L).toInt),
+      configure = _.config("spark.sql.codegen.cache.maxEntries", "4096"))
     println(s"[probe] n_base=$n n_planted_dups=${n / 20}")
     // optional 3rd arg: comma-separated stage keys (d38,d44,d53,d54,d56,d57,d57b,d59,d62,d63,d65,d68,s65,q183,s43,s55,t54,t59,
     // codec,m52,m55,curation,q155,q148,q201,q203,q204,q206,prefix,r11ops,t56,q166,q212,d67,d69,q213,q214,q226,d74) — a full run at large n is

@@ -85,20 +85,14 @@ object SkewProbe {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(40000000L)
     val nKeys = args.lift(1).map(_.toLong).getOrElse(100000L)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions", "64")
+    val spark = graft.Sessions.local(graft.Sessions.cores(32), 64, configure = _
       // force the sort-merge path — see the scaladoc
       .config("spark.sql.autoBroadcastJoinThreshold", "-1")
       .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
       // local[n] advisory sizes: detect a skewed partition at probe
       // volume (defaults target 256 MB cluster partitions)
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "16m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "16m"))
     println(s"[skew] n_fact=$n n_keys=$nKeys hot_key_share≈50%")
 
     val out = "/tmp/graft_skew_probe"

@@ -134,13 +134,7 @@ object StreamScaleProbe {
     val out = args.lift(1).getOrElse("/tmp/graft_stream_probe")
     val usPerEvent = args.lift(2).map(_.toLong).getOrElse(10000L)
     val chunks = 10
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(graft.Sessions.cores(32), 32)
     println(s"[sprobe] n_events=$n chunks=$chunks (~${n / chunks} events/micro-batch) " +
       s"us_per_event=$usPerEvent (~${600000000L / usPerEvent} events in the 10-min state window)")
     // optional 4th arg: comma-separated stage keys

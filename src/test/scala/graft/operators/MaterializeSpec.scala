@@ -76,6 +76,17 @@ class MaterializeSpec extends SparkSpec {
     }
   }
 
+  test("an unknown strategy fails both once and cut with a named error") {
+    withStrategy("reliabel") {
+      Seq[org.apache.spark.sql.DataFrame => Any](Materialize.once, Materialize.cut)
+        .foreach { materialize =>
+          val e = intercept[graft.MaterializeStrategyException](materialize(corpus()))
+          assert(e.getMessage.contains("reliabel"))
+          assert(Materialize.Strategies.forall(e.getMessage.contains))
+        }
+    }
+  }
+
   test("operators and streaming cut lineage only through the seam") {
     // a direct localCheckpoint()/checkpoint() silently ignores the
     // configured strategy; comment lines and trailing comments are skipped
