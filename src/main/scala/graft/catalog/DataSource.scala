@@ -1,13 +1,16 @@
 package graft.catalog
 
 import java.nio.file.{Files, Paths}
+
+import scala.collection.immutable.VectorMap
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 import scala.reflect.runtime.universe.TypeTag
 
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
+import org.apache.spark.sql.expressions.{Aggregator, UserDefinedFunction}
+import org.apache.spark.sql.functions.{udaf, udf}
 import org.apache.spark.sql.internal.SQLConf
 
 import graft.{CommandException, QueryExecutionException, UnknownTable}
@@ -54,14 +57,20 @@ final case class FileTable(name: String, fpath: String) {
   }
 }
 
+/** A catalog's tables (by lookup name) and custom functions (by
+  * lower-cased name) at one moment. Every catalog mutation makes a new
+  * one, so two are compared by reference, never by content. */
+final class Snapshot private[catalog] (
+    val tables: VectorMap[String, FileTable],
+    val functions: VectorMap[String, UserDefinedFunction])
+
 /** What a statement's DataFrame depends on besides the tables' files:
-  * the catalog that bound it (and that catalog's mutation count when the
-  * lookup began), the SQL text as received, and the session's
-  * explicitly-set confs. */
+  * the catalog that bound it and the snapshot it was bound from, the SQL
+  * text as received, and the session's explicitly-set confs. */
 final case class StatementKey(
-    owner: DataSource, version: Long, sql: String, confs: Map[String, String]) {
+    owner: DataSource, snapshot: Snapshot, sql: String, confs: Map[String, String]) {
   /** False once the owning catalog has mutated since this key was taken. */
-  def current: Boolean = owner.catalogVersion == version
+  def current: Boolean = owner.snapshot eq snapshot
 }
 
 /** Table-load cache policy (reference: dfsql/cache.py). With Spark the
@@ -95,7 +104,7 @@ final class DoNothingCache extends TableCache {
   * function it calls keeps its registration (a session view or a UDF
   * re-registered outside the catalog is read afresh). A mutation of the
   * owning catalog makes its older entries unreachable (the key carries
-  * the catalog version), and the next kept build drops them;
+  * the catalog snapshot), and the next kept build drops them;
   * `invalidate`, `clear` and a `maxsize` eviction drop every entry. A
   * build that overlapped any of these is not kept. */
 final class MemoryCache(maxsize: Option[Int] = None) extends TableCache {
@@ -150,9 +159,14 @@ final class MemoryCache(maxsize: Option[Int] = None) extends TableCache {
   *
   * Holds named file-backed tables with JSON metadata persistence
   * (`datasource_tables.json`, format-compatible with the reference:
-  * base_data_source.py:118-146), a table cache, a custom-function
-  * registry, and the query entry point (command sniff → dialect lowering
-  * → spark.sql → Catalyst).
+  * base_data_source.py:118-146), a table cache, custom functions and the
+  * query entry point. Tables and functions sit in one immutable `Snapshot`
+  * that every mutation swaps under this catalog's lock. A statement binds
+  * them into its parsed plan and registers nothing in the session, so
+  * catalogs on one session that share a name each see their own.
+  * `addTable`, `saveTable`, `loadMetadata` and `setCache` still publish
+  * each table as a session temp view (`dropTable` drops it) for callers
+  * that run `spark.sql` on a table's name; no statement reads them.
   */
 class DataSource(
     val spark: SparkSession,
@@ -160,14 +174,10 @@ class DataSource(
     val caseSensitive: Boolean = true,
     initialCache: TableCache = new MemoryCache) {
 
-  private val tables = mutable.LinkedHashMap[String, FileTable]()
-  private var cache: TableCache = initialCache
-  private val customFnNames = mutable.ArrayBuffer[String]()
-  private val version = new java.util.concurrent.atomic.AtomicLong
-
-  /** Catalog mutations so far: tables, cache policy or functions. */
-  private[catalog] def catalogVersion: Long = version.get
-  private def mutated(): Unit = version.incrementAndGet()
+  @volatile private var cache: TableCache = initialCache
+  @volatile private var snap = new Snapshot(VectorMap.empty, VectorMap.empty) // swapped under lock
+  /** The tables and functions a statement reads now. */
+  private[catalog] def snapshot: Snapshot = snap
 
   Files.createDirectories(Paths.get(metadataDir))
   // sessions not built withExtensions still get the dialect's pushdown
@@ -182,25 +192,23 @@ class DataSource(
 
   // ---- catalog surface (base_data_source.py:89-162) ----
 
-  def tableNames: Seq[String] = tables.values.map(_.name).toSeq
+  def tableNames: Seq[String] = snap.tables.values.map(_.name).toSeq
 
-  def contains(name: String): Boolean = tables.contains(norm(name))
+  def contains(name: String): Boolean = snap.tables.contains(norm(name))
 
-  def addTable(t: FileTable): Unit = {
-    if (tables.contains(norm(t.name)))
+  def addTable(t: FileTable): Unit = synchronized {
+    if (contains(t.name))
       throw new QueryExecutionException(
         s"Table ${t.name} already exists in data source, use DROP TABLE to " +
           "remove it if you want to recreate it.")
-    registerView(t) // validates readability, like FileTable.from_file
-    tables(norm(t.name)) = t
-    mutated()
+    publish(t) // validates readability, like FileTable.from_file
+    snap = new Snapshot(snap.tables.updated(norm(t.name), t), snap.functions)
     saveMetadata()
   }
 
-  /** Temp views register once per add/load — not per statement, which
-    * would re-read schemas (a full CSV scan under inferSchema) for every
-    * catalog table on every query. */
-  private def registerView(t: FileTable): Unit =
+  /** Publish `t` as a session temp view of its name, once per add/load.
+    * Statements bind the table themselves and never read this view. */
+  private def publish(t: FileTable): Unit =
     cache.get(spark, t).createOrReplaceTempView(t.name)
 
   def addTableFromFile(path: String): Unit = {
@@ -211,12 +219,12 @@ class DataSource(
 
   /** Unregister a table. Output that `saveTable` wrote is deleted with
     * it; a file registered from a path is never touched. */
-  def dropTable(name: String): Unit = {
-    tables.remove(norm(name)) match {
+  def dropTable(name: String): Unit = synchronized {
+    snap.tables.get(norm(name)) match {
       case Some(t) =>
+        snap = new Snapshot(snap.tables.removed(norm(name)), snap.functions)
         spark.catalog.dropTempView(t.name)
         cache.invalidate(t.fpath) // a later same-path table must re-read
-        mutated()
         if (savedHere(t)) FileUtils.deleteDirectory(new java.io.File(t.fpath))
       case None => throw new QueryExecutionException(s"Unknown table $name")
     }
@@ -232,21 +240,17 @@ class DataSource(
   private def savePath(name: String, format: String) =
     Paths.get(metadataDir, s"$name.$format")
 
-  def tableMeta(name: String): FileTable = tables.get(norm(name)) match {
+  def tableMeta(name: String): FileTable = snap.tables.get(norm(name)) match {
     case Some(t) => t
     case None => throw new QueryExecutionException(s"Unknown table $name")
   }
 
-  def table(name: String): DataFrame = tables.get(norm(name)) match {
-    case Some(t) => cache.get(spark, t)
-    case None => throw new QueryExecutionException(s"Unknown table $name")
-  }
+  def table(name: String): DataFrame = cache.get(spark, tableMeta(name))
 
-  def setCache(c: TableCache): Unit = {
-    cache.clear()
+  def setCache(c: TableCache): Unit = synchronized {
+    cache.clear() // and with it every statement entry: no new snapshot needed
     cache = c
-    mutated()
-    tables.values.foreach(registerView) // views follow the new policy
+    snap.tables.values.foreach(publish) // views follow the new policy
   }
 
   /** Persist a DataFrame as a new catalog table under the metadata dir
@@ -255,11 +259,11 @@ class DataSource(
     * the layout partition-pruned reads rely on at scale. */
   def saveTable(
       name: String, df: DataFrame, format: String = "parquet",
-      partitionBy: Seq[String] = Nil): Unit = {
+      partitionBy: Seq[String] = Nil): Unit = synchronized {
     if (!Set("csv", "json", "parquet", "orc", "xml").contains(format))
       throw new QueryExecutionException(
         s"Unsupported table format .$format (csv, json, parquet, orc, xml)")
-    if (tables.contains(norm(name)))
+    if (contains(name))
       throw new QueryExecutionException(
         s"Table $name already exists in data source, use DROP TABLE to " +
           "remove it if you want to recreate it.")
@@ -280,10 +284,9 @@ class DataSource(
     }
     Files.createFile(Paths.get(path, DataSource.SavedMarker))
     val t = FileTable(name, path)
-    tables(norm(name)) = t
     cache.invalidate(path) // the path's content just changed
-    mutated()
-    registerView(t)
+    snap = new Snapshot(snap.tables.updated(norm(name), t), snap.functions)
+    publish(t)
     saveMetadata()
   }
 
@@ -293,10 +296,10 @@ class DataSource(
 
   private def metaPath = Paths.get(metadataDir, "datasource_tables.json")
 
-  def saveMetadata(): Unit = {
+  def saveMetadata(): Unit = synchronized {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = mapper.createObjectNode()
-    tables.values.foreach { t =>
+    snap.tables.values.foreach { t =>
       val node = root.putObject(t.name)
       node.put("type", "FileTable")
       node.put("name", t.name)
@@ -305,20 +308,18 @@ class DataSource(
     Files.writeString(metaPath, mapper.writeValueAsString(root))
   }
 
-  def loadMetadata(): Unit = {
+  def loadMetadata(): Unit = synchronized {
     if (!Files.exists(metaPath)) return
-    mutated()
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = mapper.readTree(Files.readString(metaPath))
-    val it = root.fields()
-    while (it.hasNext) {
-      val e = it.next()
-      val t = FileTable(e.getValue.get("name").asText(), e.getValue.get("fpath").asText())
-      tables(norm(t.name)) = t
-      // best-effort: a stale/unreadable file must not make the whole
-      // catalog unconstructable — the entry stays (so DROP TABLE can
-      // remove it); first access reports the real error
-      try registerView(t)
+    val loaded = root.elements().asScala
+      .map(e => FileTable(e.get("name").asText(), e.get("fpath").asText())).toSeq
+    snap = new Snapshot(snap.tables ++ loaded.map(t => norm(t.name) -> t), snap.functions)
+    // best-effort: a stale/unreadable file must not make the whole
+    // catalog unconstructable — the entry stays (so DROP TABLE can
+    // remove it); first access reports the real error
+    loaded.foreach { t =>
+      try publish(t)
       catch {
         case e: Exception => System.err.println(
           s"[graft] warning: table ${t.name} (${t.fpath}) failed to load: " +
@@ -331,79 +332,66 @@ class DataSource(
 
   // ---- custom functions (base_data_source.py:151-152, functions.py:293-303)
 
-  /** Register a scalar UDF; shadows a built-in of the same name, as the
-    * reference registry does (base_data_source.py:194-197). */
-  def registerFunction[A: TypeTag, R: TypeTag](name: String, f: A => R): Unit = {
-    spark.udf.register(name, f)
-    customFnNames += name
-    mutated()
-  }
-  def registerFunction2[A: TypeTag, B: TypeTag, R: TypeTag](
-      name: String, f: (A, B) => R): Unit = {
-    spark.udf.register(name, f)
-    customFnNames += name
-    mutated()
-  }
+  /** Register a scalar function in this catalog. Inside this catalog's
+    * statements it shadows a built-in or session function of the same
+    * name, as the reference registry does (base_data_source.py:194-197);
+    * the session's function registry is not touched. */
+  def registerFunction[A: TypeTag, R: TypeTag](name: String, f: A => R): Unit =
+    addFunction(name, udf(f))
+  def registerFunction2[A: TypeTag, B: TypeTag, R: TypeTag](name: String, f: (A, B) => R): Unit =
+    addFunction(name, udf(f))
 
   /** Register a custom aggregate (reference AggregateFunction subclasses →
-    * Spark Aggregator, SURVEY.md §2.7). */
+    * Spark Aggregator, SURVEY.md §2.7), scoped as registerFunction; a call
+    * keeps its DISTINCT and FILTER. */
   def registerAggregate[IN: TypeTag, BUF, OUT](
-      name: String, agg: Aggregator[IN, BUF, OUT]): Unit = {
-    spark.udf.register(name, udaf(agg))
-    customFnNames += name
-    mutated()
+      name: String, agg: Aggregator[IN, BUF, OUT]): Unit =
+    addFunction(name, udaf(agg))
+
+  private def addFunction(name: String, f: UserDefinedFunction): Unit = synchronized {
+    val key = name.toLowerCase(java.util.Locale.ROOT)
+    snap = new Snapshot(snap.tables, snap.functions.updated(key, f.withName(name)))
   }
 
-  def customFunctionNames: Seq[String] = customFnNames.toSeq
+  def customFunctionNames: Seq[String] = snap.functions.values.map(_.name).toSeq
 
   // ---- query entry point (base_data_source.py:164-171) ----
 
   /** Command sniff first (3 regex commands), else dialect-lower and hand
-    * to Catalyst. Returns a QueryResult; use queryDF when a DataFrame is
+    * to Catalyst with this catalog's tables and functions bound in (see
+    * `analyze`). Returns a QueryResult; use queryDF when a DataFrame is
     * expected.
     *
     * Under MemoryCache a returned DataFrame may be shared between calls:
     * a repeated deterministic SELECT gives the DataFrame an earlier call
     * built, or, once that one ran and its result is small, a DataFrame
     * over the same rows whose collection runs no Spark job. The reuse key
-    * is the SQL text as received, this catalog's version and the
-    * session's explicitly-set confs (`spark.conf.getAll`). The version
-    * moves on addTable, dropTable, saveTable/CTAS, setCache, loadMetadata,
-    * registerFunction, registerFunction2 and registerAggregate;
+    * is the SQL text as received, this catalog's snapshot and the
+    * session's explicitly-set confs (`spark.conf.getAll`). The snapshot
+    * changes on addTable, dropTable, saveTable/CTAS, loadMetadata,
+    * registerFunction, registerFunction2 and registerAggregate; setCache,
     * MemoryCache.invalidate/clear and its maxsize evictions drop every
     * entry. A statement that reads a relation outside the catalog (a
     * session view, a table of the session catalog, a table function) is
-    * never reused, nor one whose functions were registered anew since. */
+    * never reused, nor one whose session functions were registered anew
+    * since. */
   def query(sql: String, reduceOutput: Boolean = false): QueryResult = {
     Commands.tryParse(sql) match {
       case Some(cmd) => cmd.execute(this)
       case None =>
-        val key = StatementKey(this, catalogVersion, sql, spark.conf.getAll)
-        val df = cache.statement(key)(analyze(sql))
+        val s = snap
+        val df = cache.statement(StatementKey(this, s, sql, spark.conf.getAll))(analyze(sql, s))
         if (reduceOutput) QueryResult.reduce(df) else QueryResult.Frame(df)
     }
   }
 
-  /** The statement's DataFrame and the test of whether it still answers
-    * the statement (`StatementLru.analyze`): false if a relation is not one
-    * of this catalog's tables, a CTE, `VALUES` or a FROM-less row, or once
-    * a function it calls is registered anew. */
-  private def analyze(sql: String): (DataFrame, () => Boolean) = {
+  /** The statement's DataFrame, with `s`'s tables and functions bound into
+    * its parsed plan, and the test of whether it still answers the
+    * statement (`StatementLru.analyze`). A table is bound as the frame
+    * `cache.get` gives, so under DoNothingCache each statement re-reads the
+    * tables it names, and a stale file reports its error there. */
+  private def analyze(sql: String, s: Snapshot): (DataFrame, () => Boolean) = {
     val lowered = Dialect.lower(sql)
-    // (re-)register views for the tables THIS statement references:
-    // restores isolation between DataSources sharing a session (each
-    // statement sees its own catalog's bindings) and DoNothingCache's
-    // re-plan-every-access contract, without the old cost of
-    // re-registering every catalog table on every query.
-    // backticked references (`lineitem`) count too — Tick tokens are
-    // stripped of their quotes so they hit the same name set.
-    val words = Dialect.tokenize(sql).collect {
-      case Dialect.Word(w) => w.toLowerCase
-      case Dialect.Tick(w) => w.stripPrefix("`").stripSuffix("`").toLowerCase
-    }.toSet
-    tables.values.foreach { t =>
-      if (words.contains(t.name.toLowerCase)) registerView(t)
-    }
     // honor the reference's case-sensitivity flag for COLUMN lookup
     // too (utils.py:87-167), for this statement's analysis only: it runs
     // under a copy of the session's conf with the flag set, so the
@@ -413,8 +401,8 @@ class DataSource(
     conf.setConf(SQLConf.CASE_SENSITIVE, caseSensitive)
     // duplicate-output-name detection lives in JoinNaming.disambiguate
     try SQLConf.withExistingConf(conf) {
-      val (df, current) = StatementLru.analyze(spark, lowered) { r =>
-        Option.when(contains(r.multipartIdentifier.head))(r)
+      val (df, current) = StatementLru.analyze(spark, lowered, s.functions) { name =>
+        s.tables.get(norm(name)).map(cache.get(spark, _))
       }
       graft.sql.JoinNaming.disambiguate(df) -> current
     } catch {

@@ -1,5 +1,7 @@
 package graft.catalog
 
+import java.util.Locale
+
 import scala.collection.mutable
 import scala.util.Try
 import scala.util.control.NonFatal
@@ -9,10 +11,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow, QueryPlanningTracker}
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedFunction, UnresolvedInlineTable, UnresolvedRelation}
 import org.apache.spark.sql.catalyst.expressions.{SubqueryExpression, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
 import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LocalRelation, LogicalPlan, OneRowRelation, SubqueryAlias, UnresolvedWith}
 import org.apache.spark.sql.catalyst.trees.TreePattern
 import org.apache.spark.sql.execution.{CollectLimitExec, SQLExecution, SparkPlan, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.graft.CatalystBridge
 import org.apache.spark.sql.internal.SQLConf
 
@@ -109,63 +113,65 @@ object StatementLru {
     }.isEmpty
 
   /** `sqlText` parsed by the session's parser, with every single-part
-    * relation that `own` knows, and that no CTE in scope shadows, replaced
-    * by `own`'s plan, as an analyzed DataFrame; and the test of whether
-    * that DataFrame still answers the statement: false if a relation is
-    * neither `own`'s, a CTE, `VALUES` nor a FROM-less row, or once a
-    * function it calls maps to another registered builder than before
-    * analysis. `MemoryCache` and `DfSql` entries both carry this test. */
-  def analyze(spark: SparkSession, sqlText: String)(
-      own: UnresolvedRelation => Option[LogicalPlan]): (DataFrame, () => Boolean) = {
-    var current: () => Boolean = null
-    val df = CatalystBridge.sql(spark, sqlText) { parsed =>
-      val (plan, test) = bind(spark, parsed)(own)
-      current = test
-      plan
-    }
-    df -> current
-  }
-
-  private def bind(spark: SparkSession, parsed: LogicalPlan)(
-      own: UnresolvedRelation => Option[LogicalPlan]): (LogicalPlan, () => Boolean) = {
-    val resolver = SQLConf.get.resolver // the analysis's, which may pin case sensitivity
+    * relation name that `own` knows, and that no CTE in scope shadows,
+    * replaced by `own`'s frame (qualified as a temp view of that name
+    * would be) and every call of a function `functions` names (in any
+    * case) by that function, before analysis, so both shadow session views
+    * and built-ins; as an analyzed DataFrame, and the test of whether it
+    * still answers the statement: false if a relation is neither `own`'s,
+    * a CTE, `VALUES` nor a FROM-less row, or once another function it
+    * calls maps to another registered builder than before analysis. */
+  def analyze(
+      spark: SparkSession, sqlText: String, functions: Map[String, UserDefinedFunction])(
+      own: String => Option[DataFrame]): (DataFrame, () => Boolean) = {
+    val owned = functions.map { case (name, f) => Seq(name.toLowerCase(Locale.ROOT)) -> f }
     var closed = true
     val calls = mutable.Set[Seq[String]]()
 
-    def walk(p: LogicalPlan, ctes: Seq[String]): LogicalPlan = {
-      p.expressions.foreach(_.foreach {
-        case f: UnresolvedFunction => calls += f.nameParts
-        case _ =>
-      })
-      p match {
-        case w: UnresolvedWith =>
-          val names = w.cteRelations.map(_._1)
-          val defs = w.cteRelations.zipWithIndex.map { case ((name, body, depth), i) =>
-            // a definition sees the earlier ones, and itself only if RECURSIVE
-            val visible = ctes ++ names.take(i) ++ Option.when(w.allowRecursion)(name)
-            (name, walk(body, visible).asInstanceOf[SubqueryAlias], depth)
-          }
-          w.copy(child = walk(w.child, ctes ++ names), cteRelations = defs)
-        case UnresolvedRelation(Seq(name), _, _) if ctes.exists(resolver(_, name)) => p
-        case r @ UnresolvedRelation(Seq(_), _, _) =>
-          own(r).getOrElse { closed = false; p }
-        case _: OneRowRelation | _: LocalRelation | _: UnresolvedInlineTable => p
-        case _: LeafNode => closed = false; p // a catalog relation, a TVF, …
-        case _ =>
-          p.mapChildren(walk(_, ctes)).transformExpressions {
-            case s: SubqueryExpression => s.withNewPlan(walk(s.plan, ctes))
-          }
+    // SQLConf.get is the analysis's conf, which may pin case sensitivity
+    def walk(p: LogicalPlan, ctes: Seq[String]): LogicalPlan = (p match {
+      case w: UnresolvedWith =>
+        val names = w.cteRelations.map(_._1)
+        val defs = w.cteRelations.zipWithIndex.map { case ((name, body, depth), i) =>
+          // a definition sees the earlier ones, and itself only if RECURSIVE
+          val visible = ctes ++ names.take(i) ++ Option.when(w.allowRecursion)(name)
+          (name, walk(body, visible).asInstanceOf[SubqueryAlias], depth)
+        }
+        w.copy(child = walk(w.child, ctes ++ names), cteRelations = defs)
+      case UnresolvedRelation(Seq(name), _, _) if ctes.exists(SQLConf.get.resolver(_, name)) => p
+      case UnresolvedRelation(Seq(name), _, _) => own(name).fold { closed = false; p } { df =>
+        val alias = if (SQLConf.get.caseSensitiveAnalysis) name else name.toLowerCase(Locale.ROOT)
+        SubqueryAlias(alias, df.queryExecution.commandExecuted)
+      }
+      case _: OneRowRelation | _: LocalRelation | _: UnresolvedInlineTable => p
+      case _: LeafNode => closed = false; p // a catalog relation, a TVF, …
+      case _ => p.mapChildren(walk(_, ctes))
+    }).transformExpressions {
+      case s: SubqueryExpression => s.withNewPlan(walk(s.plan, ctes))
+      case f: UnresolvedFunction => owned.get(f.nameParts.map(_.toLowerCase(Locale.ROOT))) match {
+        // an owned aggregate keeps the call's DISTINCT and FILTER
+        case Some(udf) => CatalystBridge.call(spark, udf, f.arguments) match {
+          case a: AggregateExpression =>
+            a.aggregateFunction.toAggregateExpression(f.isDistinct, f.filter)
+          case e => e
+        }
+        case None => calls += f.nameParts; f
       }
     }
 
-    val bound = walk(parsed, Nil)
     val registry = spark.sessionState.functionRegistry
     def builders = calls.toSeq.map {
       case Seq(name) => registry.lookupFunctionBuilder(FunctionIdentifier(name))
       case _ => None
     }
-    val used = builders // compared by reference: a new registration is a new builder
-    bound -> (() => closed && !used.contains(None) && builders == used)
+    var current: () => Boolean = null
+    val df = CatalystBridge.sql(spark, sqlText) { parsed =>
+      val bound = walk(parsed, Nil)
+      val used = builders // compared by reference: a new registration is a new builder
+      current = () => closed && !used.contains(None) && builders == used
+      bound
+    }
+    df -> current
   }
 
   /** `df` ran: its physical plan is prepared and, under AQE, its final

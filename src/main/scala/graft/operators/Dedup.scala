@@ -2187,9 +2187,6 @@ object Dedup {
       .orderBy(col("id_a"), col("id_b"))
   }
 
-  /** Probe-iteration count of the most recent [[kCore]] run. */
-  @volatile private[graft] var kCoreRoundsLastRun: Int = 0
-
   /** k-core decomposition of the near-dup graph (Seidman 1983; the
     * Batagelj–Zaveršnik peel, distributed): iteratively delete every
     * node with fewer than k neighbors until none remains, returning the
@@ -2237,7 +2234,6 @@ object Dedup {
       alive = ck
       rounds += 1
     }
-    kCoreRoundsLastRun = rounds
     if (!converged)
       throw new IllegalStateException(
         s"kCore did not converge in $maxRounds rounds — peel depth " +

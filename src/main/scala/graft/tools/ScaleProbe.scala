@@ -1202,8 +1202,7 @@ object ScaleProbe {
       val cliqueRows = core.filter(
         col("doc_id").between(n, n + 5) && col("core_deg") === 5).count()
       val chainRows = core.filter(col("doc_id") >= n + 10).count()
-      println(s"[probe]   2-core nodes: $coreN " +
-        s"(rounds=${graft.operators.Dedup.kCoreRoundsLastRun})")
+      println(s"[probe]   2-core nodes: $coreN")
       require(cliqueRows == 6, s"planted clique damaged: $cliqueRows/6")
       require(chainRows == 0, s"chain survived the peel: $chainRows rows")
     }

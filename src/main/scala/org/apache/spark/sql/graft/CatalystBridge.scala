@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.{InternalRow, QueryPlanningTracker}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, CodegenObjectFactoryMode, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.classic.{ClassicConversions, Dataset, ExpressionUtils}
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.internal.SQLConf
 
 /** Spark 4's Column⇄Expression converters and its plan→DataFrame factory
@@ -15,6 +16,10 @@ import org.apache.spark.sql.internal.SQLConf
 object CatalystBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** `f` applied to `args` as the session converts it for a plan. */
+  def call(spark: SparkSession, f: UserDefinedFunction, args: Seq[Expression]): Expression =
+    ClassicConversions.castToImpl(spark).expression(f(args.map(column): _*))
 
   /** What `spark.sql(sqlText)` gives, with `rewrite` applied to the
     * parsed plan before analysis. */

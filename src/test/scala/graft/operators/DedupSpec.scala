@@ -391,9 +391,12 @@ class DedupSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(out === Map(1L -> 2L, 2L -> 2L, 3L -> 2L),
       s"2-core must be exactly the triangle: $out")
-    // the path needed TWO peel rounds (ends first, then middles) — the
-    // fixpoint probe must have seen at least rounds=3 (2 peels + stable)
-    assert(Dedup.kCoreRoundsLastRun >= 3, Dedup.kCoreRoundsLastRun)
+    // the peel takes 3 rounds: alive nodes 8 → 5 (ends) → 3 (middles),
+    // then stable — so 2 rounds end off fixpoint and 3 reach it
+    val e = intercept[IllegalStateException](Dedup.kCore(pairs, k = 2, maxRounds = 2))
+    assert(e.getMessage.startsWith("kCore did not converge in 2 rounds"), e.getMessage)
+    assert(Dedup.kCore(pairs, k = 2, maxRounds = 3).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toMap === out)
   }
 
   test("kCore(3): a 4-clique survives k=3 with full degrees, k=4 empties it") {
