@@ -443,11 +443,11 @@ object DataSource {
     val ds = new DataSource(spark, metadataDir, caseSensitive)
     val dir = Paths.get(filesDir)
     val exts = Set("csv", "tsv", "parquet", "json", "orc")
-    val files = Files.list(dir).iterator()
-    val added = mutable.ArrayBuffer[String]()
-    files.forEachRemaining { p =>
-      val n = p.getFileName.toString
-      if (exts.contains(n.split('.').last.toLowerCase)) added += p.toString
+    // the listing holds a directory handle until closed
+    val added = scala.util.Using.resource(Files.list(dir)) { files =>
+      files.iterator().asScala
+        .filter(p => exts.contains(p.getFileName.toString.split('.').last.toLowerCase))
+        .map(_.toString).toVector
     }
     added.sorted.foreach(ds.addTableFromFile)
     if (ds.tableNames.isEmpty)

@@ -43,12 +43,7 @@ object Bucketing {
     val tbl = s"graft_${name}_${key}_b${buckets}_$dirTag"
     prepared.getOrElseUpdate((spark, sfDir, name, key, buckets), {
       val dir = Files.createTempDirectory(s"graft_bucket_$name")
-      sys.addShutdownHook {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(dir.toFile)
-      }
+      sys.addShutdownHook(Maintenance.rmTree(dir.toFile))
       val path = dir.toString
       spark.sql(s"DROP TABLE IF EXISTS $tbl")
       graft.Tables.load(spark, sfDir, name)

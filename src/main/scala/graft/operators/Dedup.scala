@@ -106,6 +106,19 @@ object Dedup {
         array((0 until k).map(i => col(s"m$i")): _*).as("sig"))
   }
 
+  /** The LSH band keys of a k-minhash `sig` column: one
+    * (band, band_hash) row per band, band_hash the xxhash64 of the
+    * band's k/bands-wide signature slice. Every banding path (the
+    * estimator pairs, the verified candidates, the persisted store)
+    * buckets through this one definition, so the store path and the
+    * recompute path put each document in the same buckets. */
+  private def bandKeys(k: Int, bands: Int): Column = {
+    val rows = k / bands
+    posexplode(array((0 until bands).map(b =>
+      xxhash64(slice(col("sig"), b * rows + 1, rows))): _*))
+      .as(Seq("band", "band_hash"))
+  }
+
   /** Candidate near-dup pairs via banded LSH over the minhash signature,
     * scored by the signature-match fraction (Jaccard estimator).
     * bands×rows must equal k. The band bucket join is an equi-join on
@@ -113,16 +126,12 @@ object Dedup {
   def minhashPairs(
       docs: DataFrame, threshold: Double = 0.5,
       k: Int = 16, bands: Int = 4): DataFrame = {
-    val rows = k / bands
     // materialize once: the signature table feeds both sides of the
     // bucket self-join, and lazy evaluation would recompute the whole
     // shingle+groupBy pipeline per branch (measured 2× cost). On a
     // long-lived cluster job use persist()/checkpoint() instead.
     val sigs = minhashSignatures(docs, k).materializeOnce()
-    val banded = sigs.select(col("doc_id"), col("sig"),
-      posexplode(array((0 until bands).map(b =>
-        xxhash64(slice(col("sig"), b * rows + 1, rows))): _*))
-        .as(Seq("band", "band_hash")))
+    val banded = sigs.select(col("doc_id"), col("sig"), bandKeys(k, bands))
     val a = banded.select(col("band"), col("band_hash"),
       col("doc_id").as("id_a"), col("sig").as("sig_a"))
     val b = banded.select(col("band"), col("band_hash"),
@@ -192,15 +201,11 @@ object Dedup {
   private[graft] def candidatesFromSignatures(
       sigs: DataFrame, k: Int, bands: Int,
       maxBucket: Int = defaultMaxBucket): DataFrame = {
-    val rows = k / bands
     // capBuckets materializes ONCE (the cap and both sides of the
     // bucket self-join all read that checkpoint — rule: shared
     // self-join subtrees are checkpointed once), so the signature
     // pipeline runs once end-to-end with no inner checkpoint here.
-    val banded = capBuckets(sigs.select(col("doc_id"),
-      posexplode(array((0 until bands).map(b =>
-        xxhash64(slice(col("sig"), b * rows + 1, rows))): _*))
-        .as(Seq("band", "band_hash"))),
+    val banded = capBuckets(sigs.select(col("doc_id"), bandKeys(k, bands)),
       Seq("band", "band_hash"), maxBucket)
     banded.select(col("band"), col("band_hash"), col("doc_id").as("id_a"))
       .join(banded.select(col("band"), col("band_hash"),
@@ -229,25 +234,22 @@ object Dedup {
     * 2^16 hashes = 512 KB per array row; both verification shapes are
     * exact, so the branch NEVER changes results (DedupSpec pins
     * equality; tools.ScaleProbe's giant-doc stage proves the fallback
-    * at real size). The branch itself is decided from an Observation
-    * max riding the `bounded` checkpoint, so the common all-small case
-    * keeps today's plan with zero extra jobs. */
+    * at real size). The branch is decided from the max doc size
+    * observed on the candidate pairs' checkpoint (verifiedInter), so
+    * the common all-small case keeps the array plan with zero extra
+    * jobs. */
   private[graft] val maxArrayDocShingles: Long = 1L << 16
 
-  /** Test-visible record of the last verification-shape decision
-    * (verifyFromShingles / prefixJaccardJoin): the measured max doc-set
-    * size and the branch taken ("array" | "hybrid"). Written at builder
-    * time (the Observation is read right after the bounded checkpoint),
-    * read ONLY by specs/probes — never used for control flow. */
-  private[graft] object VerifySplitProbe {
-    val lastMaxSz = new java.util.concurrent.atomic.AtomicLong(-1L)
-    val lastBranch =
-      new java.util.concurrent.atomic.AtomicReference[String]("unprobed")
-    def record(maxSz: Long, maxArraySz: Long): Unit = {
-      lastMaxSz.set(maxSz)
-      lastBranch.set(if (maxSz <= maxArraySz) "array" else "hybrid")
-    }
-  }
+  /** The verification shape a verified-pairs frame was built with:
+    * "hybrid" when its plan unions the array arm with the exploded arm
+    * (the only Union that carries the `inter` column), else "array".
+    * Read off the frame's own plan, for specs and probes. */
+  private[graft] def verifyShape(verified: DataFrame): String =
+    if (verified.queryExecution.analyzed.exists {
+      case u: org.apache.spark.sql.catalyst.plans.logical.Union =>
+        u.output.exists(_.name == "inter")
+      case _ => false
+    }) "hybrid" else "array"
 
   private[graft] def verifyFromShingles(
       ex: DataFrame, cands: DataFrame,
@@ -270,7 +272,7 @@ object Dedup {
       .orderBy(col("id_a"), col("id_b"))
   }
 
-  /** The verification core over candidate pairs that already carry
+  /** The jaccard verification over candidate pairs that already carry
     * their set sizes: `sized` is (id_a, id_b, sz_a, sz_b) plus any
     * pass-through columns, which ride to the (unordered) output next to
     * `jaccard`. `broadcastIds` ships the candidate-doc id set to the
@@ -287,63 +289,55 @@ object Dedup {
     // verify — prune it BEFORE paying |cands|·shingles join rows. Pure
     // optimization: the surviving output set is identical (the computed
     // jaccard uses df-capped intersections, which only lowers J further).
-    // The max doc size over surviving pairs rides the checkpoint as an
-    // Observation metric — it picks the verification shape below.
-    val obs = org.apache.spark.sql.Observation()
     val bounded = sized
       .filter(least(col("sz_a"), col("sz_b")).cast("double") /
         greatest(col("sz_a"), col("sz_b")) >= threshold)
-      .observe(obs, max(greatest(col("sz_a"), col("sz_b"))).as("mx"))
-      // read twice below (the candidate-doc id set AND the intersection
-      // chain) — without this the entire candidate stage runs twice
-      .materializeOnce()
-    val maxSz = Option(obs.get("mx"))
-      .map(_.asInstanceOf[Number].longValue).getOrElse(0L)
-    VerifySplitProbe.record(maxSz, maxArraySz)
-    // Each candidate doc's CAPPED shingle set travels as ONE array row
-    // and |A∩B| is computed per pair IN-TASK by array_intersect — the
-    // prefixJaccardJoin verification shape. The exploded form joined
-    // every bounded pair against the (doc, sh) rows, amplifying to
-    // Σ_pairs sz rows, and the optimizer was measured BROADCASTING the
-    // ~|ex| "filtered" subtree twice (once per join side) with a
-    // sort-merge semi under each — ~4 s of d43's 4.4 s warm verify at
-    // sf0.1. Shingles per doc are distinct, so the distinct-set
-    // intersection count is the exact df-capped intersection; a doc
-    // whose shingles are all capped away simply has no set row, and the
-    // explicit inter ≥ 1 filter reproduces the old inner-join behavior
-    // (pairs with zero capped overlap never surface) for ANY threshold.
-    // Pairs touching a doc above maxArraySz (never at gate SF —
-    // Observation-probed above, so the common case pays nothing) verify
-    // through the exploded join instead: same exact intersection, no
-    // multi-MB array row (rule: both shapes are exact, the split is
-    // performance-only).
     val extra = sized.columns.toSeq
       .filterNot(Set("id_a", "id_b", "sz_a", "sz_b")).map(col)
-    splitVerifiedInter(ex, bounded, keep, maxSz, maxArraySz, broadcastIds)
+    verifiedInter(ex, bounded, Some(keep), maxArraySz, broadcastIds)
       .select(Seq(col("id_a"), col("id_b"),
         (col("inter") / (col("sz_a") + col("sz_b") - col("inter"))).as("jaccard"))
         ++ extra: _*)
       .filter(col("jaccard") >= threshold)
   }
 
-  /** (pair columns…, inter ≥ 1) for every bounded candidate
-    * pair — array-set verification for pairs of small docs, exploded
-    * join for pairs touching a doc above `maxArraySz`. Both shapes
-    * compute the exact df-capped |A∩B| (ex is distinct per doc), so the
-    * split never changes the result set. `maxSz` is the pre-measured
-    * max doc size over `bounded` (an Observation ride-along): when it
-    * says no big docs exist, the plan is exactly the pure array shape. */
-  private def splitVerifiedInter(
-      ex: DataFrame, bounded: DataFrame, keep: DataFrame,
-      maxSz: Long, maxArraySz: Long, broadcastIds: Boolean): DataFrame = {
+  /** The verification core shared by every exact set-similarity
+    * verify (verifySized, prefixJaccardJoin): (pair columns…, inter)
+    * with inter = |A∩B| ≥ 1 over the shingles of `ex` (distinct per
+    * doc) that survive the optional `keep` semi-join, for every pair of
+    * `candidates` — (id_a, id_b, sz_a, sz_b) plus pass-through columns.
+    *
+    * `candidates` is materialized once (it is read by the candidate-doc
+    * id set AND the intersection chain — without this the entire
+    * candidate stage runs twice), and the max doc size over it rides
+    * that job as an observed metric and picks the shape. Each candidate doc's
+    * shingle set travels as ONE array row and |A∩B| is computed per
+    * pair IN-TASK by array_intersect: the exploded form joined every
+    * pair against the (doc, sh) rows, amplifying to Σ_pairs sz rows
+    * (21M intermediate rows for 310k prefix-join candidates at sf0.1,
+    * and ~4 s of d43's 4.4 s warm verify with the optimizer
+    * broadcasting the ~|ex| subtree twice). A doc whose shingles are all
+    * capped away has no set row, and the explicit inter ≥ 1 filter
+    * reproduces the inner-join behavior (pairs with zero capped overlap
+    * never surface) for ANY threshold. Pairs touching a doc above
+    * `maxArraySz` (never at gate SF) verify through the exploded join
+    * instead: same exact intersection, no multi-MB array row per pair.
+    * Both shapes are exact, so the split never changes the result set;
+    * when no big doc exists the plan is exactly the pure array shape. */
+  private def verifiedInter(
+      ex: DataFrame, candidates: DataFrame, keep: Option[DataFrame],
+      maxArraySz: Long, broadcastIds: Boolean = false): DataFrame = {
+    val (bounded, m) =
+      candidates.materializeOnce(max(greatest(col("sz_a"), col("sz_b"))).as("mx"))
     val pairCols = bounded.columns.toSeq.map(col)
-    // the candidate docs' df-capped (doc_id, sh) rows
+    // the candidate docs' (df-capped) (doc_id, sh) rows
     def candShingles(pairs: DataFrame): DataFrame = {
       val ids = pairs.select(col("id_a").as("doc_id"))
         .union(pairs.select(col("id_b").as("doc_id")))
         .distinct()
-      ex.join(if (broadcastIds) broadcast(ids) else ids, Seq("doc_id"), "left_semi")
-        .join(keep, Seq("sh"), "left_semi")
+      val cand =
+        ex.join(if (broadcastIds) broadcast(ids) else ids, Seq("doc_id"), "left_semi")
+      keep.fold(cand)(cand.join(_, Seq("sh"), "left_semi"))
     }
     def arrayInter(pairs: DataFrame): DataFrame = {
       val docSets = candShingles(pairs)
@@ -366,7 +360,7 @@ object Dedup {
         .groupBy(pairCols: _*)
         .agg(count(lit(1)).as("inter"))
     }
-    if (maxSz <= maxArraySz) arrayInter(bounded)
+    if (m.long("mx") <= maxArraySz) arrayInter(bounded)
     else {
       val big = col("sz_a") > maxArraySz || col("sz_b") > maxArraySz
       arrayInter(bounded.filter(!big))
@@ -1216,23 +1210,18 @@ object Dedup {
     * decision, never for data). */
   private def writeStoreTables(exRaw: DataFrame, k: Int, path: String,
       sub: String, mode: String): Unit = {
-    val obs = org.apache.spark.sql.Observation()
     // doc_id as bigint whatever the input's integral type: readers use
     // the fixed schemas below
-    val ex = exRaw.select(col("doc_id").cast("long").as("doc_id"), col("sh"))
-      .observe(obs,
+    val (ex, m) = exRaw.select(col("doc_id").cast("long").as("doc_id"), col("sh"))
+      .materializeOnce(
         count(lit(1)).as("n_sh"),
         approx_count_distinct(col("doc_id")).as("n_docs"),
         approx_count_distinct(col("sh")).as("n_distinct"))
-      .materializeOnce()
-    def metric(name: String): Long =
-      Option(obs.get(name)).map(_.asInstanceOf[Number].longValue).getOrElse(0L)
-    val nSh = metric("n_sh")
-    sizedForWrite(ex, nSh).write.mode(mode).parquet(s"$path/shingles$sub")
-    sizedForWrite(signaturesFromShingles(ex, k), metric("n_docs"))
+    sizedForWrite(ex, m.long("n_sh")).write.mode(mode).parquet(s"$path/shingles$sub")
+    sizedForWrite(signaturesFromShingles(ex, k), m.long("n_docs"))
       .write.mode(mode).parquet(s"$path/signatures$sub")
     sizedForWrite(ex.groupBy(col("sh")).agg(count(lit(1)).as("df")),
-        metric("n_distinct"))
+        m.long("n_distinct"))
       .write.mode(mode).parquet(s"$path/df$sub")
   }
 
@@ -1278,7 +1267,6 @@ object Dedup {
       storeDf: DataFrame, threshold: Double = 0.5, k: Int = 16,
       bands: Int = 4, shingleN: Int = 3, maxDf: Int = 100,
       maxBucket: Int = defaultMaxBucket): DataFrame = {
-    val rows = k / bands
     // batch side: ONE explode shared by its signatures, df increment and
     // verification shingles (same sharing as minhashVerifiedPairs)
     val bex = shingleHashTable(batch, shingleN).materializeOnce()
@@ -1287,9 +1275,7 @@ object Dedup {
     val keys = Seq("band", "band_hash")
     def banded(sigs: DataFrame, isBatch: Boolean) =
       sigs.select(col("doc_id"), col("sz"), lit(isBatch).as("is_batch"),
-        posexplode(array((0 until bands).map(b =>
-          xxhash64(slice(col("sig"), b * rows + 1, rows))): _*))
-          .as(Seq("band", "band_hash")))
+        bandKeys(k, bands))
     val bBanded = banded(bsigs, isBatch = true)
     // the batch's neighbourhood: store rows in a bucket that holds a
     // batch doc. Every such bucket keeps its full store ∪ batch
@@ -1451,14 +1437,11 @@ object Dedup {
     // scan of the labels per round). Initialized from the seed so a seed
     // that is already the fixpoint — star clusters, the dedup common
     // case — converges after ONE probe iteration.
+    // (the sum reads 0 on an empty frame: zero pairs → done)
     def checkpointWithSum(l: DataFrame): (DataFrame, java.math.BigDecimal) = {
-      val obs = org.apache.spark.sql.Observation()
-      val ck = l.observe(obs,
-        sum(col("label").cast("decimal(38,0)")).as("s")).materializeOnce()
-      // observe's sum is null on an empty frame (zero pairs → done)
-      val s = Option(obs.get("s").asInstanceOf[java.math.BigDecimal])
-        .getOrElse(java.math.BigDecimal.ZERO)
-      (ck, s)
+      val (ck, m) =
+        l.materializeOnce(sum(col("label").cast("decimal(38,0)")).as("s"))
+      (ck, m.decimal("s"))
     }
     val (seed, seedSum) = checkpointWithSum(labels)
     labels = seed
@@ -1974,11 +1957,8 @@ object Dedup {
     // frame, so its two consumers (the next half-round's join and the
     // final select) re-project instead of paying a third checkpoint.
     def rawWithMax(raw: DataFrame): (DataFrame, java.math.BigDecimal) = {
-      val obs = org.apache.spark.sql.Observation()
-      val ck = raw.observe(obs, max(col("x")).as("mx")).materializeOnce()
-      val mx = Option(obs.get("mx").asInstanceOf[java.math.BigDecimal])
-        .getOrElse(java.math.BigDecimal.ZERO)
-      (ck, mx)
+      val (ck, m) = raw.materializeOnce(max(col("x")).as("mx"))
+      (ck, m.decimal("mx"))
     }
     def rescaled(raw: DataFrame, mx: java.math.BigDecimal, out: String): DataFrame =
       raw.select(col("v"),
@@ -2213,9 +2193,8 @@ object Dedup {
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .materializeOnce() // feeds every round; don't recompute the pairs
     def checkpointWithCount(df: DataFrame): (DataFrame, Long) = {
-      val obs = org.apache.spark.sql.Observation()
-      val ck = df.observe(obs, count(lit(1)).as("c")).materializeOnce()
-      (ck, obs.get("c").asInstanceOf[Long])
+      val (ck, m) = df.materializeOnce(count(lit(1)).as("c"))
+      (ck, m.long("c"))
     }
     def survivors(alive: DataFrame): DataFrame =
       edges
@@ -2529,14 +2508,9 @@ object Dedup {
       .withColumn("sz", count(lit(1)).over(szW))
       .filter(col("rn") <= plen)
       .select(col("sh"), col("doc_id"), col("sz"))
-    // Candidate pairs with sizes, length-bound pruned, deduped.
-    // Materialized once: feeds the candidate-doc id set, the verify
-    // join, and the final projection (rule 5).
-    // (the max doc size over surviving pairs rides the checkpoint as an
-    // Observation metric — it picks the verification shape below, the
-    // same scale guard as verifyFromShingles)
-    val obs = org.apache.spark.sql.Observation()
-    val bounded = prefix
+    // Candidate pairs with sizes, length-bound pruned, deduped, then
+    // verified by the shared core (no df cap: the prefix join is exact)
+    val candidates = prefix
       .select(col("sh"), col("doc_id").as("id_a"), col("sz").as("sz_a"))
       .join(prefix.select(col("sh"), col("doc_id").as("id_b"),
         col("sz").as("sz_b")), Seq("sh"))
@@ -2545,66 +2519,7 @@ object Dedup {
           >= lit(thresholdNum) * greatest(col("sz_a"), col("sz_b")))
       .select(col("id_a"), col("id_b"), col("sz_a"), col("sz_b"))
       .distinct()
-      .observe(obs, max(greatest(col("sz_a"), col("sz_b"))).as("mx"))
-      .materializeOnce()
-    val maxSz = Option(obs.get("mx"))
-      .map(_.asInstanceOf[Number].longValue).getOrElse(0L)
-    VerifySplitProbe.record(maxSz, maxArraySz)
-    // Verification fetches each candidate doc's FULL shingle set as one
-    // array row and intersects per pair IN-TASK (array_intersect over
-    // distinct sets = exact |A∩B|). The previous shape joined every
-    // candidate pair against the exploded shingle table — at sf0.1 that
-    // join output was measured at 21.1M rows (310k surviving candidates
-    // × ~53 shingles each) shuffled by (id_b, sh) and re-aggregated;
-    // per-pair work is now two array fetches + one hash-set
-    // intersection, and nothing row-amplifies. The doc-set table is
-    // semi-joined down to candidate docs first, so at scale only
-    // candidate docs' sets are built or shuffled. Pairs touching a doc
-    // above maxArrayDocShingles (never at gate SF — Observation-probed,
-    // so the common case pays nothing) verify through the exploded join
-    // instead of carrying a multi-MB array row per pair; both shapes
-    // are exact, so the split never changes the result set.
-    def arrayInter(pairs: DataFrame): DataFrame = {
-      val candIds = pairs.select(col("id_a").as("doc_id"))
-        .union(pairs.select(col("id_b").as("doc_id")))
-        .distinct()
-      val docSets = ex.join(candIds, Seq("doc_id"), "left_semi")
-        .groupBy(col("doc_id")).agg(collect_list(col("sh")).as("shs"))
-      pairs
-        .join(docSets.select(col("doc_id").as("id_a"), col("shs").as("shs_a")),
-          Seq("id_a"))
-        .join(docSets.select(col("doc_id").as("id_b"), col("shs").as("shs_b")),
-          Seq("id_b"))
-        .select(col("id_a"), col("id_b"), col("sz_a"), col("sz_b"),
-          size(array_intersect(col("shs_a"), col("shs_b"))).cast("long").as("inter"))
-    }
-    def explodedInter(pairs: DataFrame): DataFrame = {
-      val ids = pairs.select(col("id_a").as("doc_id"))
-        .union(pairs.select(col("id_b").as("doc_id")))
-        .distinct()
-      val exBig = ex.join(ids, Seq("doc_id"), "left_semi")
-      pairs
-        .join(exBig.select(col("doc_id").as("id_a"), col("sh")), Seq("id_a"))
-        .join(exBig.select(col("doc_id").as("id_b"), col("sh")),
-          Seq("id_b", "sh"))
-        .groupBy(col("id_a"), col("id_b"), col("sz_a"), col("sz_b"))
-        .agg(count(lit(1)).as("inter"))
-        .select(col("id_a"), col("id_b"), col("sz_a"), col("sz_b"),
-          col("inter"))
-    }
-    // NOTE the exploded arm's inner join only surfaces inter ≥ 1 pairs;
-    // the array arm emits inter = 0 rows, but the threshold filter below
-    // kills them identically (num ≥ 1 forces inter > 0), so the arms
-    // stay row-equivalent after the filter.
-    val inter =
-      if (maxSz <= maxArraySz) arrayInter(bounded)
-      else {
-        val big = col("sz_a") > maxArraySz ||
-          col("sz_b") > maxArraySz
-        arrayInter(bounded.filter(!big))
-          .unionByName(explodedInter(bounded.filter(big)))
-      }
-    inter
+    verifiedInter(ex, candidates, None, maxArraySz)
       .filter(lit(thresholdDen + thresholdNum) * col("inter")
         >= lit(thresholdNum) * (col("sz_a") + col("sz_b")))
       .select(col("id_a"), col("id_b"), col("inter"), col("sz_a"), col("sz_b"),

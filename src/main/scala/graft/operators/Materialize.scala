@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.storage.StorageLevel
 
 /** The single materialization seam for every operator that cuts lineage.
@@ -77,6 +77,33 @@ object Materialize {
     case _          => df.localCheckpoint()
   }
 
+  /** Aggregate metrics read back from an observed materialization.
+    * Null-safe: an aggregate over an empty frame (a null sum or max)
+    * reads as zero, whatever numeric type Spark delivered. */
+  final class Metrics private[Materialize] (values: Map[String, Any]) {
+    def long(name: String): Long = values.get(name) match {
+      case Some(n: Number) => n.longValue
+      case _               => 0L
+    }
+
+    def decimal(name: String): java.math.BigDecimal = values.get(name) match {
+      case Some(d: java.math.BigDecimal) => d
+      case _                             => java.math.BigDecimal.ZERO
+    }
+  }
+
+  /** Materialize `df` with the named aggregate metrics riding the materialization job as
+    * an Observation — the one place an operator reads a driver-side
+    * decision (a fixpoint sum, a max size, a row count) off a frame it
+    * cuts anyway, at zero extra jobs. All three strategies are eager, so
+    * the metrics are final when this returns. */
+  private def observed(df: DataFrame, materialize: DataFrame => DataFrame,
+      metric: Column, more: Seq[Column]): (DataFrame, Metrics) = {
+    val obs = Observation()
+    val out = materialize(df.observe(obs, metric, more: _*))
+    (out, new Metrics(obs.get))
+  }
+
   /** Postfix form so call sites keep reading like the plan they build:
     * `df.join(...).groupBy(...).agg(...).materializeOnce()`.
     */
@@ -85,5 +112,14 @@ object Materialize {
 
     /** Lineage-cutting variant for nondeterministic-value frames. */
     def materializeCut(): DataFrame = Materialize.cut(df)
+
+    /** [[materializeOnce]] plus named aggregate metrics over the frame,
+      * read from the same job. */
+    def materializeOnce(metric: Column, more: Column*): (DataFrame, Metrics) =
+      observed(df, Materialize.once, metric, more)
+
+    /** [[materializeCut]] plus named aggregate metrics over the frame. */
+    def materializeCut(metric: Column, more: Column*): (DataFrame, Metrics) =
+      observed(df, Materialize.cut, metric, more)
   }
 }

@@ -1271,14 +1271,10 @@ object Multimodal {
     * repeat). */
   def writeImageSignatureStore(
       spark: SparkSession, docs: DataFrame, path: String): Unit = {
-    val obs = org.apache.spark.sql.Observation()
-    val h = imageHashRows(spark,
+    val (h, m) = imageHashRows(spark,
         docs.select(col("doc_id"), lit(false).as("variant")))
-      .observe(obs, count(lit(1)).as("n"))
-      .materializeOnce()
-    val n = Option(obs.get("n"))
-      .map(_.asInstanceOf[Number].longValue).getOrElse(0L)
-    graft.operators.Dedup.sizedForWrite(h, n)
+      .materializeOnce(count(lit(1)).as("n"))
+    graft.operators.Dedup.sizedForWrite(h, m.long("n"))
       .write.mode("overwrite").parquet(s"$path/hashes")
   }
 
@@ -1357,12 +1353,8 @@ object Multimodal {
     // file count derives from the row count riding the materialization
     // (guide §6 — per-batch appends otherwise inherit the stream's 8
     // shuffle partitions and explode the store's file count at scale)
-    val obs = org.apache.spark.sql.Observation()
-    val h = hashes.observe(obs, count(lit(1)).as("n"))
-      .materializeOnce()
-    val n = Option(obs.get("n"))
-      .map(_.asInstanceOf[Number].longValue).getOrElse(0L)
-    graft.operators.Dedup.sizedForWrite(h, n)
+    val (h, m) = hashes.materializeOnce(count(lit(1)).as("n"))
+    graft.operators.Dedup.sizedForWrite(h, m.long("n"))
       .write.mode(mode).parquet(s"$path/hashes$sub")
   }
 

@@ -1272,14 +1272,12 @@ object Similarity {
     // a 64-row state vector. The max is global, so branching on it
     // driver-side is the identical function.
     for (_ <- 1 to iters) {
-      val obs = org.apache.spark.sql.Observation()
-      val w = g.join(v, Seq("i"))
+      val (w, wm) = g.join(v, Seq("i"))
         .groupBy(col("j")).agg(sum(col("g") * col("v")).as("w"))
         .select(col("j").as("i"), col("w"))
-        .observe(obs, max(abs(col("w"))).as("m"))
-        .materializeOnce() // linear chain, not an exponential re-plan
-      val m = Option(obs.get("m").asInstanceOf[java.lang.Long])
-        .map(_.longValue).getOrElse(0L)
+        // linear chain, not an exponential re-plan
+        .materializeOnce(max(abs(col("w"))).as("m"))
+      val m = wm.long("m")
       v =
         if (m == 0L) w.select(col("i"), lit(0L).as("v"))
         else w.select(col("i"), intDiv(col("w") * lit(256L), lit(m)).as("v"))

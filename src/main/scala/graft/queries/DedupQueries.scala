@@ -601,32 +601,13 @@ object DedupQueries {
     // appended). Same rule-13 recall dependency as d38/d53.
     Q("q153_stream_ingest_dedup", Some(ingestLoopOracle),
       (s, d) => {
-        import java.nio.file.{Files, Paths}
         val all = docs(s, d).filter(col("doc_id") < ingestMaxDocId)
-        val root = Files.createTempDirectory("graft_q153")
-        sys.addShutdownHook {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-          }
-          rm(root.toFile)
-        }
+        val root = Staging.tempDir("graft_q153")
         val store = s"$root/store"
         Dedup.writeSignatureStore(
           all.filter(col("doc_id") % 10 =!= 8 && col("doc_id") % 10 =!= 9), store)
         val in = s"$root/in"
-        Files.createDirectories(Paths.get(in))
-        val t0 = System.currentTimeMillis()
-        Seq(8, 9).zipWithIndex.foreach { case (m, i) =>
-          val tmp = Files.createTempDirectory(s"graft_q153_b$i")
-          all.filter(col("doc_id") % 10 === m)
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = Option(tmp.toFile.listFiles()).getOrElse(Array.empty)
-            .find(_.getName.endsWith(".parquet"))
-            .getOrElse(sys.error(s"q153 batch $i produced no parquet part"))
-          val dst = Paths.get(in, s"batch_$i.parquet")
-          Files.move(part.toPath, dst)
-          dst.toFile.setLastModified(t0 + i * 2000L)
-        }
+        Staging.stageFrames(Seq(8, 9).map(m => all.filter(col("doc_id") % 10 === m)), in)
         val sink = s"$root/sink"
         val q = graft.streaming.IngestDedup.start(s, in, store, sink,
           threshold = 0.5, maxDf = 20)
@@ -664,29 +645,10 @@ object DedupQueries {
          |JOIN ov ON s.batch_id = ov.batch_id AND s.doc_id = ov.doc_id
          |ORDER BY s.batch_id, s.doc_id""".stripMargin),
       (s, d) => {
-        import java.nio.file.{Files, Paths}
         val all = docs(s, d).filter(col("doc_id") < ingestMaxDocId)
-        val root = Files.createTempDirectory("graft_q158")
-        sys.addShutdownHook {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-          }
-          rm(root.toFile)
-        }
+        val root = Staging.tempDir("graft_q158")
         val in = s"$root/in"
-        Files.createDirectories(Paths.get(in))
-        val t0 = System.currentTimeMillis()
-        Seq(8, 9).zipWithIndex.foreach { case (m, i) =>
-          val tmp = Files.createTempDirectory(s"graft_q158_b$i")
-          all.filter(col("doc_id") % 10 === m)
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = Option(tmp.toFile.listFiles()).getOrElse(Array.empty)
-            .find(_.getName.endsWith(".parquet"))
-            .getOrElse(sys.error(s"q158 batch $i produced no parquet part"))
-          val dst = Paths.get(in, s"batch_$i.parquet")
-          Files.move(part.toPath, dst)
-          dst.toFile.setLastModified(t0 + i * 2000L)
-        }
+        Staging.stageFrames(Seq(8, 9).map(m => all.filter(col("doc_id") % 10 === m)), in)
         val sink = s"$root/sink"
         val q = graft.streaming.IngestDecontam.start(
           s, in, all.filter(col("doc_id").isInCollection(benchIds)), sink)

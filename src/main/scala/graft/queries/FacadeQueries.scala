@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 
@@ -31,15 +29,8 @@ object FacadeQueries {
     // lifetime is a slow leak
     cached.keys.filter(_._1.sparkContext.isStopped).foreach(cached.remove)
     cached.getOrElseUpdate((s, dir), {
-      val meta = Files.createTempDirectory("graft_ds_meta")
-      // deleteOnExit alone is a no-op for a NON-EMPTY dir (the DataSource
-      // writes metadata into it) — a shutdown hook deletes recursively
-      sys.addShutdownHook {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(meta.toFile)
-      }
+      // the DataSource writes metadata into it: deleted recursively at exit
+      val meta = Staging.tempDir("graft_ds_meta")
       val d = new DataSource(s, meta.toString, initialCache = new DoNothingCache)
       Tables.all.foreach(n => d.addTable(graft.catalog.FileTable(n, s"$dir/$n.parquet")))
       d

@@ -775,23 +775,14 @@ object MultimodalQueries {
     // membership = store0 + ALL day-0 keepers.
     Q("q154_stream_image_ingest", Some(q154Sql),
       (s, d) => {
-        import java.nio.file.{Files, Paths}
         val all = docs(s, d).filter(col("doc_id") < imageLoopMaxDocId)
-        val root = Files.createTempDirectory("graft_q154")
-        sys.addShutdownHook {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-          }
-          rm(root.toFile)
-        }
+        val root = Staging.tempDir("graft_q154")
         val store = s"$root/store"
         Multimodal.writeImageSignatureStore(s,
           all.filter(col("doc_id") % 10 =!= 8 && col("doc_id") % 10 =!= 9),
           store)
         val in = s"$root/in"
-        Files.createDirectories(Paths.get(in))
-        val t0 = System.currentTimeMillis()
-        val batches = Seq(
+        Staging.stageFrames(Seq(
           all.filter(col("doc_id") % 10 === 1)
             .select(col("doc_id"), lit(true).as("variant"))
             .unionByName(all.filter(col("doc_id") % 10 === 8)
@@ -799,17 +790,7 @@ object MultimodalQueries {
           all.filter(col("doc_id") % 10 === 8)
             .select(col("doc_id"), lit(true).as("variant"))
             .unionByName(all.filter(col("doc_id") % 10 === 9)
-              .select(col("doc_id"), lit(false).as("variant"))))
-        batches.zipWithIndex.foreach { case (b, i) =>
-          val tmp = Files.createTempDirectory(s"graft_q154_b$i")
-          b.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = Option(tmp.toFile.listFiles()).getOrElse(Array.empty)
-            .find(_.getName.endsWith(".parquet"))
-            .getOrElse(sys.error(s"q154 batch $i produced no parquet part"))
-          val dst = Paths.get(in, s"batch_$i.parquet")
-          Files.move(part.toPath, dst)
-          dst.toFile.setLastModified(t0 + i * 2000L)
-        }
+              .select(col("doc_id"), lit(false).as("variant")))), in)
         val sink = s"$root/sink"
         val q = graft.streaming.IngestImageDedup.start(s, in, store, sink)
         try q.processAllAvailable() finally q.stop()

@@ -1369,29 +1369,11 @@ object PipelineQueries {
     // t53 arithmetic over raw events, rolling-hash mode per rule 12).
     Q("q161_stream_cardinality", Some(streamCardinalityOracle),
       (s, d) => {
-        import java.nio.file.{Files, Paths}
         val ev = Tables.load(s, d, "events")
-        val root = Files.createTempDirectory("graft_q161")
-        sys.addShutdownHook {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-          }
-          rm(root.toFile)
-        }
+        val root = Staging.tempDir("graft_q161")
         val in = s"$root/in"
-        Files.createDirectories(Paths.get(in))
-        val t0 = System.currentTimeMillis()
-        Seq(0, 1).foreach { i =>
-          val tmp = Files.createTempDirectory(s"graft_q161_b$i")
-          ev.filter(pmod(col("event_id"), lit(2L)) === i)
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = Option(tmp.toFile.listFiles()).getOrElse(Array.empty)
-            .find(_.getName.endsWith(".parquet"))
-            .getOrElse(sys.error(s"q161 chunk $i produced no parquet part"))
-          val dst = Paths.get(in, s"chunk_$i.parquet")
-          Files.move(part.toPath, dst)
-          dst.toFile.setLastModified(t0 + i * 2000L)
-        }
+        Staging.stageFrames(
+          Seq(0, 1).map(i => ev.filter(pmod(col("event_id"), lit(2L)) === i)), in)
         val store = s"$root/regs"
         val q = graft.streaming.StreamingCardinality.start(
           s, in, store, oracleHash = true)
@@ -1505,27 +1487,11 @@ object PipelineQueries {
     // sketch replaced by exact arithmetic.
     Q("q223_stream_ht_accounting", Some(htEstimateOracle),
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val root = Files.createTempDirectory("graft_q223")
-        sys.addShutdownHook {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-          }
-          rm(root.toFile)
-        }
+        val root = Staging.tempDir("graft_q223")
         val in = s"$root/in"
-        Files.createDirectories(Paths.get(in))
         val all = Tables.load(s, d, "documents")
-        // three file batches (doc_id mod 3), q153's single-part move
-        (0 to 2).foreach { m =>
-          val tmp = Files.createTempDirectory(s"graft_q223_b$m")
-          all.filter(col("doc_id") % 3 === m)
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = Option(tmp.toFile.listFiles()).getOrElse(Array.empty)
-            .find(_.getName.endsWith(".parquet"))
-            .getOrElse(sys.error(s"q223 batch $m produced no parquet part"))
-          Files.move(part.toPath, Paths.get(in, s"batch_$m.parquet"))
-        }
+        // three file batches (doc_id mod 3)
+        Staging.stageFrames((0 to 2).map(m => all.filter(col("doc_id") % 3 === m)), in)
         val q = graft.streaming.StreamingAccounting.start(
           s, in, s"$root/tallies", oracleHash = true)
         try q.processAllAvailable() finally q.stop()

@@ -285,33 +285,15 @@ object SimilarityQueries {
     // which never saw a stream — the q153 proof shape for vectors.
     Q("s67_stream_ivf_ingest", Some(ivfInsertOracle),
       (s, d) => {
-        import java.nio.file.{Files, Paths}
         val e = emb(s, d)
-        val root = Files.createTempDirectory("graft_s67")
-        sys.addShutdownHook {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-          }
-          rm(root.toFile)
-        }
+        val root = Staging.tempDir("graft_s67")
         val index = s"$root/index"
         Similarity.writeIvfIndex(
           e.filter(col("vec_id") < 5 || col("vec_id") >= 100), index)
         val in = s"$root/in"
-        Files.createDirectories(Paths.get(in))
-        val t0 = System.currentTimeMillis()
-        (0 until 2).foreach { i =>
-          val tmp = Files.createTempDirectory(s"graft_s67_b$i")
+        Staging.stageFrames((0 until 2).map(i =>
           e.filter(col("vec_id") >= 5 && col("vec_id") < 100
-              && pmod(col("vec_id"), lit(2)) === i)
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = Option(tmp.toFile.listFiles()).getOrElse(Array.empty)
-            .find(_.getName.endsWith(".parquet"))
-            .getOrElse(sys.error(s"s67 batch $i produced no parquet part"))
-          val dst = Paths.get(in, s"batch_$i.parquet")
-          Files.move(part.toPath, dst)
-          dst.toFile.setLastModified(t0 + i * 2000L)
-        }
+            && pmod(col("vec_id"), lit(2)) === i)), in)
         graft.streaming.EventPipeline.withStreamPartitions(s, 8) {
           val q = graft.streaming.IngestVectors.start(
             s, in, index, s"$root/chk")

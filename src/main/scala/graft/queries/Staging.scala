@@ -1,8 +1,11 @@
 package graft.queries
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
+
+import graft.operators.Maintenance
 
 /** Per-process staging of the events file into a clean directory for the
   * streaming-source queries (a file stream needs a directory containing
@@ -14,16 +17,37 @@ object Staging {
   private val sinkDirs = scala.collection.concurrent.TrieMap[String, String]()
   private val storeDirs = scala.collection.concurrent.TrieMap[String, String]()
 
-  /** Recursive-delete shutdown hook for a staging dir that gets FILLED
-    * after creation (deleteOnExit is a no-op on non-empty dirs). */
-  private def rmOnExit(dir: java.nio.file.Path): Unit = {
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir.toFile)
+  /** A fresh temp dir that a shutdown hook deletes recursively — for a
+    * staging dir that gets FILLED after creation (deleteOnExit is a
+    * no-op on non-empty dirs). */
+  private[graft] def tempDir(prefix: String): java.nio.file.Path = {
+    val dir = Files.createTempDirectory(prefix)
+    sys.addShutdownHook(Maintenance.rmTree(dir.toFile))
+    dir
+  }
+
+  /** Stage each frame as ONE parquet file `chunk_NN.parquet` under
+    * `dir`, with ascending mtimes — the multi-micro-batch arrival shape
+    * (a file source under maxFilesPerTrigger=1 replays them in order).
+    * Each frame is written to its own temp dir, whose single part is
+    * moved out; the temp dir (with Spark's `_SUCCESS` and `.crc`
+    * files) is deleted right after. */
+  private[graft] def stageFrames(frames: Seq[DataFrame], dir: String): Unit = {
+    val t0 = System.currentTimeMillis()
+    val root = Paths.get(dir)
+    Files.createDirectories(root)
+    frames.zipWithIndex.foreach { case (df, i) =>
+      val tmp = Files.createTempDirectory(s"graft_stage_c$i")
+      try {
+        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+        val part = Option(tmp.toFile.listFiles()).getOrElse(Array.empty)
+          .find(_.getName.endsWith(".parquet"))
+          .getOrElse(sys.error(s"staged chunk $i produced no parquet part"))
+        val dst = root.resolve(f"chunk_$i%02d.parquet")
+        Files.move(part.toPath, dst, StandardCopyOption.REPLACE_EXISTING)
+        dst.toFile.setLastModified(t0 + i * 2000L)
+      } finally Maintenance.rmTree(tmp.toFile)
     }
-    ()
   }
 
   /** Per-JVM persisted MinHash signature store for the d53 gate: the
@@ -36,12 +60,11 @@ object Staging {
   def signatureStoreDir(
       spark: org.apache.spark.sql.SparkSession, sfDir: String): String =
     storeDirs.getOrElseUpdate(sfDir, {
-      val dir = Files.createTempDirectory("graft_sigstore")
+      val dir = tempDir("graft_sigstore")
       graft.operators.Dedup.writeSignatureStore(
         graft.Tables.load(spark, sfDir, "documents")
           .filter(org.apache.spark.sql.functions.col("doc_id") % 10 =!= 9),
         dir.toString)
-      rmOnExit(dir)
       dir.toString
     })
 
@@ -55,13 +78,12 @@ object Staging {
   def imageStoreDir(
       spark: org.apache.spark.sql.SparkSession, sfDir: String): String =
     imageStoreDirs.getOrElseUpdate(sfDir, {
-      val dir = Files.createTempDirectory("graft_imgstore")
+      val dir = tempDir("graft_imgstore")
       graft.operators.Multimodal.writeImageSignatureStore(
         spark,
         graft.Tables.load(spark, sfDir, "documents")
           .filter(org.apache.spark.sql.functions.col("doc_id") % 10 =!= 9),
         dir.toString)
-      rmOnExit(dir)
       dir.toString
     })
 
@@ -73,10 +95,9 @@ object Staging {
   def ivfIndexDir(
       spark: org.apache.spark.sql.SparkSession, sfDir: String): String =
     ivfIndexDirs.getOrElseUpdate(sfDir, {
-      val dir = Files.createTempDirectory("graft_ivfindex")
+      val dir = tempDir("graft_ivfindex")
       graft.operators.Similarity.writeIvfIndex(
         graft.Tables.load(spark, sfDir, "embeddings"), dir.toString)
-      rmOnExit(dir)
       dir.toString
     })
 
@@ -89,13 +110,12 @@ object Staging {
   def ivfInsertDir(
       spark: org.apache.spark.sql.SparkSession, sfDir: String): String =
     ivfInsertDirs.getOrElseUpdate(sfDir, {
-      val dir = Files.createTempDirectory("graft_ivfinsert")
+      val dir = tempDir("graft_ivfinsert")
       val emb = graft.Tables.load(spark, sfDir, "embeddings")
       graft.operators.Similarity.writeIvfIndex(
         emb.filter(col("vec_id") < 5 || col("vec_id") >= 100), dir.toString)
       graft.operators.Similarity.appendIvfIndex(
         emb.filter(col("vec_id") >= 5 && col("vec_id") < 100), dir.toString)
-      rmOnExit(dir)
       dir.toString
     })
 
@@ -114,7 +134,7 @@ object Staging {
   def ivfDeleteDir(
       spark: org.apache.spark.sql.SparkSession, sfDir: String): String =
     ivfDeleteDirs.getOrElseUpdate(sfDir, {
-      val dir = Files.createTempDirectory("graft_ivfdelete")
+      val dir = tempDir("graft_ivfdelete")
       val emb = graft.Tables.load(spark, sfDir, "embeddings")
       graft.operators.Similarity.writeIvfIndex(
         emb.filter(col("vec_id") < 5 || col("vec_id") >= 100), dir.toString)
@@ -123,7 +143,6 @@ object Staging {
       graft.operators.Similarity.deleteFromIvfIndex(
         emb.filter(col("vec_id") >= ivfDeleteLo && col("vec_id") < ivfDeleteHi)
           .select(col("vec_id")), dir.toString)
-      rmOnExit(dir)
       dir.toString
     })
 
@@ -137,20 +156,17 @@ object Staging {
   def driftBaselineDir(
       spark: org.apache.spark.sql.SparkSession, sfDir: String): String =
     driftDirs.getOrElseUpdate(sfDir, {
-      val dir = Files.createTempDirectory("graft_driftbase")
+      val dir = tempDir("graft_driftbase")
       graft.operators.Curation.writeDriftBaseline(
         graft.Tables.load(spark, sfDir, "documents")
           .filter(org.apache.spark.sql.functions.col("lang") === "en"),
         dir.toString, oracleHash = true)
-      rmOnExit(dir)
       dir.toString
     })
 
   def eventsDir(sfDir: String): String = staged.getOrElseUpdate(sfDir, {
-    val dir = Files.createTempDirectory("graft_events_stage")
+    val dir = tempDir("graft_events_stage")
     Files.copy(Paths.get(s"$sfDir/events.parquet"), dir.resolve("events.parquet"))
-    dir.toFile.deleteOnExit()
-    dir.resolve("events.parquet").toFile.deleteOnExit()
     dir.toString
   })
 
@@ -160,14 +176,6 @@ object Staging {
     * Cleanup is a recursive shutdown hook: the sink FILLS the directory
     * with batch_N parquet, and deleteOnExit is a no-op on non-empty
     * dirs. */
-  def sinkDir(key: String): String = sinkDirs.getOrElseUpdate(key, {
-    val dir = Files.createTempDirectory(s"graft_sink_$key")
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir.toFile)
-    }
-    dir.toString
-  })
+  def sinkDir(key: String): String =
+    sinkDirs.getOrElseUpdate(key, tempDir(s"graft_sink_$key").toString)
 }

@@ -175,8 +175,7 @@ object EventPipeline {
   private val cdcChunkDirs = scala.collection.concurrent.TrieMap[String, String]()
   def cdcChunksDir(spark: SparkSession, sfDir: String): String =
     cdcChunkDirs.getOrElseUpdate(sfDir, {
-      val dir = java.nio.file.Files.createTempDirectory("graft_cdc_chunks")
-      dir.toFile.deleteOnExit()
+      val dir = graft.queries.Staging.tempDir("graft_cdc_chunks")
       // raw read, NOT Tables.load: the chunks keep ts in whatever
       // physical form the source file carries (int64 on legacy nanos
       // boots, timestamp_ntz µs now) — eventsStream derives its schema
@@ -184,21 +183,11 @@ object EventPipeline {
       // round-trip is representation-agnostic by construction.
       val ev = graft.Tables.readEventsRaw(spark, s"$sfDir/events.parquet")
       val mx = ev.agg(max(col("event_id"))).head().getLong(0)
-      val t0 = System.currentTimeMillis()
-      (0 until 3).foreach { i =>
+      graft.queries.Staging.stageFrames((0 until 3).map { i =>
         val lo = i * (mx + 1) / 3
         val hi = (i + 1) * (mx + 1) / 3
-        val tmp = java.nio.file.Files.createTempDirectory(s"graft_cdc_c$i")
         ev.filter(col("event_id") >= lo && col("event_id") < hi)
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = Option(tmp.toFile.listFiles()).getOrElse(Array.empty)
-          .find(_.getName.endsWith(".parquet"))
-          .getOrElse(sys.error(s"cdc chunk $i produced no parquet part"))
-        val dst = dir.resolve(f"chunk_$i%02d.parquet")
-        java.nio.file.Files.move(part.toPath, dst)
-        dst.toFile.setLastModified(t0 + i * 2000L)
-        dst.toFile.deleteOnExit()
-      }
+      }, dir.toString)
       dir.toString
     })
 
@@ -228,12 +217,7 @@ object EventPipeline {
     if (freshStart) {
       val stale = Option(new java.io.File(snapRoot).listFiles()).getOrElse(Array.empty)
         .filter(f => f.isDirectory && f.getName.startsWith("snap_"))
-      stale.foreach { d =>
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(d)
-      }
+      stale.foreach(graft.operators.Maintenance.rmTree)
     }
     withStreamPartitions(spark, 8) {
       val writer = eventsStream(spark, chunksDir, maxFilesPerTrigger = Some(1))
@@ -371,12 +355,7 @@ object EventPipeline {
     // double-count on read-back. Purge them up front.
     val stale = Option(new java.io.File(outDir).listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith("batch_"))
-    stale.foreach { d =>
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(d)
-    }
+    stale.foreach(graft.operators.Maintenance.rmTree)
     withStreamPartitions(spark, 8) {
       startForeachBatchQueryInner(spark, eventsDir, outDir)
     }

@@ -47,23 +47,19 @@ object IngestDecontam {
       writer
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           // sink file counts derive from row counts riding the
-          // materializations as Observation metrics (guide §6 — the
+          // materializations as observed metrics (guide §6 — the
           // writes were inheriting the stream's 8 shuffle partitions)
-          val bObs = org.apache.spark.sql.Observation()
-          val b = batch.observe(bObs, count(lit(1)).as("n"))
-            .materializeOnce() // read by shingles AND clean join
-          def metric(o: org.apache.spark.sql.Observation): Long =
-            Option(o.get("n")).map(_.asInstanceOf[Number].longValue).getOrElse(0L)
-          val fObs = org.apache.spark.sql.Observation()
-          val flags = Dedup.decontaminateAgainst(b, benchSh, n, fpp = fpp)
-            .observe(fObs, count(lit(1)).as("n"))
-            .materializeOnce() // feeds the flag sink AND the clean anti-join
-          Dedup.sizedForWrite(flags, metric(fObs))
+          // b is read by shingles AND the clean join
+          val (b, bM) = batch.materializeOnce(count(lit(1)).as("n"))
+          // flags feed the flag sink AND the clean anti-join
+          val (flags, fM) = Dedup.decontaminateAgainst(b, benchSh, n, fpp = fpp)
+            .materializeOnce(count(lit(1)).as("n"))
+          Dedup.sizedForWrite(flags, fM.long("n"))
             .write.mode("overwrite").parquet(s"$sinkRoot/flags/batch_$batchId")
           // clean rows ≤ batch rows; the batch count is the right bound
           Dedup.sizedForWrite(
               b.join(flags.select(col("doc_id")), Seq("doc_id"), "left_anti"),
-              metric(bObs))
+              bM.long("n"))
             .write.mode("overwrite").parquet(s"$sinkRoot/clean/batch_$batchId")
           ()
         }

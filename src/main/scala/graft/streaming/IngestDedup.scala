@@ -67,25 +67,20 @@ object IngestDedup {
           // §6 / rule 26 in reverse: the writes were inheriting the
           // stream's 8 shuffle partitions, so every micro-batch wrote a
           // fixed number of near-empty files). The counts ride the
-          // materializations as Observation metrics — zero extra jobs.
-          val resObs = org.apache.spark.sql.Observation()
-          val res = Dedup
+          // materializations as observed metrics — zero extra jobs.
+          val (res, resM) = Dedup
             .dedupBatchAgainstStore(spark, b, storePath, threshold, maxDf)
-            .observe(resObs, count(lit(1)).as("n"))
             // decisions feed the sink AND the survivor semi-join; and
             // they MUST be fully materialized before the store append
             // below mutates what dedupBatchAgainstStore reads — a cut,
             // so no strategy can recompute them against the new store
-            .materializeCut()
-          def metric(o: org.apache.spark.sql.Observation): Long =
-            Option(o.get("n")).map(_.asInstanceOf[Number].longValue).getOrElse(0L)
-          Dedup.sizedForWrite(res, metric(resObs))
+            .materializeCut(count(lit(1)).as("n"))
+          Dedup.sizedForWrite(res, resM.long("n"))
             .write.mode("overwrite").parquet(s"$sinkRoot/decisions/batch_$batchId")
-          val survObs = org.apache.spark.sql.Observation()
-          val survivors = b.join(res.filter(col("keep")).select(col("doc_id")),
-            Seq("doc_id"), "left_semi")
-            .observe(survObs, count(lit(1)).as("n")).materializeOnce()
-          Dedup.sizedForWrite(survivors, metric(survObs))
+          val (survivors, survM) = b
+            .join(res.filter(col("keep")).select(col("doc_id")), Seq("doc_id"), "left_semi")
+            .materializeOnce(count(lit(1)).as("n"))
+          Dedup.sizedForWrite(survivors, survM.long("n"))
             .write.mode("overwrite").parquet(s"$sinkRoot/clean/batch_$batchId")
           Dedup.appendBatchToStore(survivors, storePath,
             tag = Some(f"batch_$batchId%05d"))

@@ -56,14 +56,10 @@ object IngestImageDedup {
           // count rides the checkpoint so the sink write's file count is
           // row-derived (guide §6) instead of the stream's 8 shuffle
           // partitions
-          val resObs = org.apache.spark.sql.Observation()
-          val res = Multimodal
+          val (res, resM) = Multimodal
             .dedupImageHashesAgainstStore(spark, hashes, storePath)
-            .observe(resObs, count(lit(1)).as("n"))
-            .materializeCut()
-          val nRes = Option(resObs.get("n"))
-            .map(_.asInstanceOf[Number].longValue).getOrElse(0L)
-          graft.operators.Dedup.sizedForWrite(res, nRes)
+            .materializeCut(count(lit(1)).as("n"))
+          graft.operators.Dedup.sizedForWrite(res, resM.long("n"))
             .write.mode("overwrite")
             .parquet(s"$sinkRoot/decisions/batch_$batchId")
           val kept = hashes.join(

@@ -418,7 +418,7 @@ object FuzzDump {
     * the cross-engine fuzz can never drift from what the gate checks. */
   def dumpCases(spark: org.apache.spark.sql.SparkSession, sfDir: String,
       outDir: String, seed: Long, n: Int): (Seq[String], Seq[(String, String)]) = {
-    val meta = java.nio.file.Files.createTempDirectory("graft_fuzz_meta")
+    val meta = graft.queries.Staging.tempDir("graft_fuzz_meta") // removed at exit
     val ds = new graft.catalog.DataSource(spark, meta.toString,
       initialCache = new graft.catalog.DoNothingCache)
     ParityFuzz.tableNames.foreach(t =>

@@ -264,11 +264,10 @@ object ScaleProbe {
         gread, threshold = 0.5, maxDf = 200)
       val giantPair = p.filter(col("id_a") === nb && col("id_b") === nb + 1)
         .collect()
+      val shape = graft.operators.Dedup.verifyShape(p)
       println(f"[probe]   verify: ${(System.nanoTime() - t0) / 1e9}%.1f s; " +
-        s"branch=${graft.operators.Dedup.VerifySplitProbe.lastBranch.get} " +
-        s"maxSz=${graft.operators.Dedup.VerifySplitProbe.lastMaxSz.get}")
-      require(graft.operators.Dedup.VerifySplitProbe.lastBranch.get == "hybrid",
-        "giant docs did not trigger the exploded fallback")
+        s"branch=$shape")
+      require(shape == "hybrid", "giant docs did not trigger the exploded fallback")
       require(giantPair.length == 1, "giant near-dup pair not found")
       // independent exact recount of the giant pair's jaccard
       val gsh = graft.operators.Dedup.shingleHashTable(

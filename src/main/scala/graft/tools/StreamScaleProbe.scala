@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
+import graft.operators.Maintenance.rmTree
+import graft.queries.Staging.stageFrames
 import graft.streaming.EventPipeline
 
 /** Streaming/state-store scale probe (round-8 verdict #3): the batch
@@ -51,26 +53,6 @@ object StreamScaleProbe {
           (pmod(xxhash64(col("event_id"), lit(2)), lit(4)) + 1).cast("int")).as("event_type"),
         (pmod(xxhash64(col("event_id"), lit(3)), lit(10000)).cast("double") / 100.0)
           .as("value"))
-  }
-
-  /** Stage each frame as ONE parquet file with ascending mtimes — the
-    * multi-micro-batch arrival shape (maxFilesPerTrigger=1 then replays
-    * them in order). */
-  private def stageFrames(frames: Seq[DataFrame], dir: String): Unit = {
-    val t0 = System.currentTimeMillis()
-    val root = java.nio.file.Paths.get(dir)
-    java.nio.file.Files.createDirectories(root)
-    frames.zipWithIndex.foreach { case (df, i) =>
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft_sprobe_c$i")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = Option(tmp.toFile.listFiles()).getOrElse(Array.empty)
-        .find(_.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"probe chunk $i produced no parquet part"))
-      val dst = root.resolve(f"chunk_$i%02d.parquet")
-      java.nio.file.Files.move(part.toPath, dst,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      dst.toFile.setLastModified(t0 + i * 2000L)
-    }
   }
 
   /** Stage `chunks` LSN-ordered parquet files (ascending event_id
@@ -462,10 +444,7 @@ object StreamScaleProbe {
     // mark the staged files already-processed against a REBUILT base
     // (zero ingested batches, postings assert trips on the wrong thing)
     Seq("s67_ivf", "s67_in", "s67_chk").foreach { d =>
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(s"$out/$d"))
+      rmTree(new java.io.File(s"$out/$d"))
     }
     val dims = sequence(lit(1), lit(64))
     def comp(seed: org.apache.spark.sql.Column) =
@@ -779,10 +758,7 @@ object StreamScaleProbe {
     require(resultSet(index) == after, "prune changed the served results")
     // retrain ≡ from-scratch at volume, bit-for-bit
     val freshDir = s"$out/s70_fresh"
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    rm(new java.io.File(freshDir))
+    rmTree(new java.io.File(freshDir))
     time("s70 from-scratch rebuild (the reference arm)")(
       graft.operators.Similarity.writeIvfIndex(
         live, freshDir, nBits = 5, seed = 11L))
@@ -898,10 +874,7 @@ object StreamScaleProbe {
     val docsDir = s"$out/acct_docs"
     val store = s"$out/acct_tallies"
     val ckpt = s"$out/acct_ckpt"
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    Seq(docsDir, store, ckpt).foreach(d => rm(new java.io.File(d)))
+    Seq(docsDir, store, ckpt).foreach(d => rmTree(new java.io.File(d)))
     // varied sources and lengths: 5 sources, 20..416 tokens per doc
     // (independent seeded hashes per attribute — rule 19), plus ONE
     // book-length outlier: 2.2M tokens, past the pre-clamp ANSI throw

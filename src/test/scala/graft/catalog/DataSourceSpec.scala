@@ -110,6 +110,21 @@ class DataSourceSpec extends SparkSpec {
     assert(ds.tableNames === Seq("titanic"))
   }
 
+  test("fromDir closes its directory listing") {
+    val meta = tmpDir()
+    val data = tmpDir()
+    Files.writeString(data.resolve("notes.txt"), "not a table")
+    val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.UnixOperatingSystemMXBean]
+    val before = os.getOpenFileDescriptorCount
+    (1 to 200).foreach { _ =>
+      intercept[QueryExecutionException](
+        DataSource.fromDir(spark, meta.toString, data.toString))
+    }
+    val grown = os.getOpenFileDescriptorCount - before
+    assert(grown < 100, s"open descriptors grew by $grown over 200 fromDir calls")
+  }
+
   test("fromDir over the full testdata dir: all 10 parquet tables queryable") {
     val meta = tmpDir()
     val ds = DataSource.fromDir(spark, meta.toString, "/root/testdata/sf0.001")

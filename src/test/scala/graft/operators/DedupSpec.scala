@@ -650,19 +650,22 @@ class DedupSpec extends SparkSpec {
       (100L + k, t.replaceFirst("\\w+$", "zz"))
     }
     val docs = (base ++ dups).toDF("doc_id", "text")
-    def rows(maxArraySz: Long) =
-      Dedup.prefixJaccardJoin(docs, maxArraySz = maxArraySz).collect()
+    // (rows, the verification shape read off the returned frame's plan)
+    def rows(maxArraySz: Long) = {
+      val out = Dedup.prefixJaccardJoin(docs, maxArraySz = maxArraySz)
+      (out.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-          r.getLong(4), r.getDouble(5))).toSeq
-    val arrayPath = rows(Dedup.maxArrayDocShingles) // every doc small
-    assert(Dedup.VerifySplitProbe.lastBranch.get === "array")
-    val explodedPath = rows(1L)                     // every pair falls back
-    assert(Dedup.VerifySplitProbe.lastBranch.get === "hybrid")
+          r.getLong(4), r.getDouble(5))).toSeq, Dedup.verifyShape(out))
+    }
+    val (arrayPath, arrayShape) = rows(Dedup.maxArrayDocShingles) // every doc small
+    assert(arrayShape === "array")
+    val (explodedPath, explodedShape) = rows(1L) // every pair falls back
+    assert(explodedShape === "hybrid")
     assert(arrayPath.nonEmpty, "corpus must contain near-dup pairs")
     assert(arrayPath === explodedPath)
     // mixed: only the 10-shingle docs exceed the bound — both arms run
-    val mixed = rows(8L)
-    assert(Dedup.VerifySplitProbe.lastBranch.get === "hybrid")
+    val (mixed, mixedShape) = rows(8L)
+    assert(mixedShape === "hybrid")
     assert(mixed === arrayPath)
   }
 
@@ -673,20 +676,22 @@ class DedupSpec extends SparkSpec {
     import spark.implicits._
     val cands = Seq((0L, 1L), (0L, 2L), (1L, 2L), (0L, 3L), (3L, 4L))
       .toDF("id_a", "id_b")
-    def rows(maxArraySz: Long) =
-      Dedup.verifyFromShingles(sh, cands, 0.4, 100, maxArraySz = maxArraySz)
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val arrayPath = rows(Dedup.maxArrayDocShingles)
-    assert(Dedup.VerifySplitProbe.lastBranch.get === "array")
-    val explodedPath = rows(1L)
-    assert(Dedup.VerifySplitProbe.lastBranch.get === "hybrid")
+    // (rows, the verification shape read off the returned frame's plan)
+    def rows(maxArraySz: Long) = {
+      val out = Dedup.verifyFromShingles(sh, cands, 0.4, 100, maxArraySz = maxArraySz)
+      (out.collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq,
+        Dedup.verifyShape(out))
+    }
+    val (arrayPath, arrayShape) = rows(Dedup.maxArrayDocShingles)
+    assert(arrayShape === "array")
+    val (explodedPath, explodedShape) = rows(1L)
+    assert(explodedShape === "hybrid")
     assert(arrayPath.nonEmpty)
     assert(arrayPath === explodedPath)
     // mixed split: docs 0-2 have 12 shingles (big at bound 10), docs
     // 3-4 have 8 (small) — both arms run and union
-    assert(rows(10L) === arrayPath)
-    assert(Dedup.VerifySplitProbe.lastBranch.get === "hybrid")
+    assert(rows(10L) === ((arrayPath, "hybrid")))
   }
 
   test("containmentPairs: asymmetric threshold keeps only the contained side") {

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.operators.Materialize.Ops
 
 /** The materialization seam (round-7 directive 3).
   *
@@ -87,12 +88,31 @@ class MaterializeSpec extends SparkSpec {
     }
   }
 
-  test("operators and streaming cut lineage only through the seam") {
-    // a direct localCheckpoint()/checkpoint() silently ignores the
-    // configured strategy; comment lines and trailing comments are skipped
-    val direct = """\.(localCheckpoint|checkpoint)\s*\(""".r
-    val roots = Seq("src/main/scala/graft/operators", "src/main/scala/graft/streaming")
-    val hits = roots.flatMap { r =>
+  test("observed metrics read the same under every strategy, and 0 when empty") {
+    spark.sparkContext.setCheckpointDir(
+      java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
+    val ids = spark.range(1, 101).toDF("id")
+    Materialize.Strategies.foreach { s =>
+      withStrategy(s) {
+        val metrics = Seq(sum(col("id")).as("s"), count(lit(1)).as("n"))
+        val (out, m) = ids.materializeOnce(metrics.head, metrics.tail: _*)
+        assert((m.long("s"), m.long("n")) === ((5050L, 100L)), s)
+        assert(out.count() === 100L, s)
+        val (_, cut) = ids.materializeCut(metrics.head, metrics.tail: _*)
+        assert((cut.long("s"), cut.long("n")) === ((5050L, 100L)), s)
+        // an empty frame: the sum is null and the count 0 — both read 0
+        val (_, empty) = ids.filter(col("id") < 0)
+          .materializeOnce(metrics.head, metrics.tail: _*)
+        assert((empty.long("s"), empty.long("n")) === ((0L, 0L)), s)
+        assert(empty.decimal("s") === java.math.BigDecimal.ZERO, s)
+      }
+    }
+  }
+
+  /** Code lines (comment lines and trailing comments skipped) under
+    * `roots` matching `pattern`, outside Materialize.scala. */
+  private def codeHits(roots: Seq[String], pattern: scala.util.matching.Regex): Seq[String] =
+    roots.flatMap { r =>
       val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(r))
       try {
         import scala.jdk.CollectionConverters._
@@ -106,10 +126,32 @@ class MaterializeSpec extends SparkSpec {
             case (line, i) if {
               val t = line.trim
               !t.startsWith("*") && !t.startsWith("/*") &&
-                direct.findFirstIn(t.split("//", 2)(0)).isDefined
+                pattern.findFirstIn(t.split("//", 2)(0)).isDefined
             } => s"$p:${i + 1}: ${line.trim}"
           }
       }
+
+  private val operatorRoots =
+    Seq("src/main/scala/graft/operators", "src/main/scala/graft/streaming")
+
+  test("operators and streaming cut lineage only through the seam") {
+    // a direct localCheckpoint()/checkpoint() silently ignores the
+    // configured strategy
+    val hits = codeHits(operatorRoots, """\.(localCheckpoint|checkpoint)\s*\(""".r)
     assert(hits.isEmpty, "direct lineage cuts bypass Materialize:\n" + hits.mkString("\n"))
+  }
+
+  test("operators and streaming observe metrics only through the seam") {
+    // an Observation outside the seam is a second copy of the
+    // observed-checkpoint convention (and of its null handling)
+    val hits = codeHits(operatorRoots, """\bObservation\s*\(""".r)
+    assert(hits.isEmpty, "Observation outside Materialize:\n" + hits.mkString("\n"))
+  }
+
+  test("operator objects hold no process-global Atomic state") {
+    // a decision recorded in a global races between queries built concurrently;
+    // specs read it off the returned frame instead (Dedup.verifyShape)
+    val hits = codeHits(Seq("src/main/scala/graft/operators"), """\bAtomic[A-Z]\w*""".r)
+    assert(hits.isEmpty, "Atomic state in operators:\n" + hits.mkString("\n"))
   }
 }
