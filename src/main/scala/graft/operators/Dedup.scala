@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CatalystBridge
 
 import graft.functions.TextFunctions
 import graft.operators.Materialize.Ops
@@ -1207,7 +1208,15 @@ object Dedup {
     * count derives from its own row count. The counts ride the
     * materialization as Observation metrics (count + two approx
     * distincts — zero extra jobs; approximate is fine for a FILE-COUNT
-    * decision, never for data). */
+    * decision, never for data).
+    *
+    * The three writes are independent once `ex` is materialized, so they
+    * run as concurrent Spark jobs on a pool owned by this call; each
+    * carries the caller's local properties (job group, tags). The call
+    * returns or throws only after all three have finished, and rethrows
+    * the first failure in write order as it was raised. No `_SUCCESS`
+    * marker is written: store readers skip `_` files, and each marker
+    * costs the local filesystem two forked `chmod`s. */
   private def writeStoreTables(exRaw: DataFrame, k: Int, path: String,
       sub: String, mode: String): Unit = {
     // doc_id as bigint whatever the input's integral type: readers use
@@ -1217,12 +1226,26 @@ object Dedup {
         count(lit(1)).as("n_sh"),
         approx_count_distinct(col("doc_id")).as("n_docs"),
         approx_count_distinct(col("sh")).as("n_distinct"))
-    sizedForWrite(ex, m.long("n_sh")).write.mode(mode).parquet(s"$path/shingles$sub")
-    sizedForWrite(signaturesFromShingles(ex, k), m.long("n_docs"))
-      .write.mode(mode).parquet(s"$path/signatures$sub")
-    sizedForWrite(ex.groupBy(col("sh")).agg(count(lit(1)).as("df")),
-        m.long("n_distinct"))
-      .write.mode(mode).parquet(s"$path/df$sub")
+    val tables = Seq(
+      "shingles" -> sizedForWrite(ex, m.long("n_sh")),
+      "signatures" -> sizedForWrite(signaturesFromShingles(ex, k), m.long("n_docs")),
+      "df" -> sizedForWrite(ex.groupBy(col("sh")).agg(count(lit(1)).as("df")),
+        m.long("n_distinct")))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(tables.size)
+    try {
+      val writes = tables.map { case (name, df) =>
+        CatalystBridge.async(ex.sparkSession, pool) {
+          df.write.mode(mode)
+            .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+            .parquet(s"$path/$name$sub")
+        }
+      }
+      val failures = writes.flatMap { w =>
+        try { w.join(); None }
+        catch { case e: java.util.concurrent.CompletionException => Some(e.getCause) }
+      }
+      failures.headOption.foreach(e => throw e)
+    } finally pool.shutdown()
   }
 
   /** The store tables' schemas, fixed by writeStoreTables: readers pass
@@ -1309,9 +1332,12 @@ object Dedup {
         (!bFirst || col("obatch")).as("b_batch"))
       .distinct()
     // the df cap merges the persisted corpus counts with the batch
-    // increment (one union+groupBy — never a corpus shingle scan)
+    // increment in ONE aggregate — never a corpus shingle scan. bex holds
+    // a shingle once per doc, so each of its rows adds 1 to that
+    // shingle's df; pre-aggregating it would add an exchange to the
+    // decision's dependency chain for the same sums
     val keep = storeDf.select(col("sh"), col("df"))
-      .unionByName(bex.groupBy(col("sh")).agg(count(lit(1)).as("df")))
+      .unionByName(bex.select(col("sh"), lit(1L).as("df")))
       .groupBy(col("sh")).agg(sum(col("df")).as("t"))
       .filter(col("t") <= maxDf).select(col("sh"))
     // the store's shingle index enters lazily and is semi-joined to the

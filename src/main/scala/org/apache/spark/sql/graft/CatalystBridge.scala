@@ -1,10 +1,13 @@
 package org.apache.spark.sql.graft
 
+import java.util.concurrent.{CompletableFuture, ExecutorService}
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.{InternalRow, QueryPlanningTracker}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, CodegenObjectFactoryMode, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.classic.{ClassicConversions, Dataset, ExpressionUtils}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.internal.SQLConf
 
@@ -51,4 +54,11 @@ object CatalystBridge {
   def cacheEntry(df: DataFrame): Option[AnyRef] =
     df.sparkSession.sharedState.cacheManager
       .lookupCachedData(ClassicConversions.castToImpl(df)).map(_.cachedRepresentation)
+
+  /** `body` run on `pool` as if on the calling thread: the caller's
+    * local properties (job group, job tags, any property a listener
+    * reads) and active session carry over to every job it starts.
+    * Spark's own capture for work it submits from other threads. */
+  def async[T](spark: SparkSession, pool: ExecutorService)(body: => T): CompletableFuture[T] =
+    SQLExecution.withThreadLocalCaptured(ClassicConversions.castToImpl(spark), pool)(body)
 }

@@ -12,7 +12,7 @@ import graft.catalog.{DataSource, QueryResult}
 class ReferenceParitySpec extends SparkSpec {
 
   private def fixture(): (DataSource, Path) = {
-    val dir = Files.createTempDirectory("graft_parity")
+    val dir = suiteTempDir("graft_parity")
     val csv = dir.resolve("titanic.csv")
     Files.writeString(csv,
       """passenger_id,survived,p_class,name,sex,age,sib_sp,parch,fare,cabin,embarked

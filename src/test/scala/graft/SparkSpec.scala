@@ -1,19 +1,38 @@
 package graft
 
+import java.nio.file.{Files, Path}
 import java.util.concurrent.atomic.AtomicInteger
+
+import scala.collection.mutable
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.operators.Maintenance
 
 /** Shared session for all suites — one JVM-wide SparkSession (getOrCreate
   * returns the same instance across suites; building per-suite would leak
   * contexts). */
-trait SparkSpec extends AnyFunSuite {
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf0001 = "/root/testdata/sf0.001"
   def sf001 = "/root/testdata/sf0.01"
+
+  private val suiteDirs = mutable.Buffer[Path]()
+
+  /** A fresh temp dir, removed with its contents when the suite ends. */
+  def suiteTempDir(prefix: String): Path = suiteDirs.synchronized {
+    val dir = Files.createTempDirectory(prefix)
+    suiteDirs += dir
+    dir
+  }
+
+  override def afterAll(): Unit =
+    try suiteDirs.synchronized(suiteDirs.foreach(d => Maintenance.rmTree(d.toFile)))
+    finally super.afterAll()
 
   /** Listener-counted jobs and compiled codegen classes of `body`. */
   def jobsAndCompiles[A](body: => A): (A, Int, Long) = {

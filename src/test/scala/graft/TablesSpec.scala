@@ -11,7 +11,7 @@ import java.nio.file.{Files, Paths}
 class TablesSpec extends SparkSpec {
 
   test("registerAll isolates a poisoned table: other nine still query") {
-    val dir = Files.createTempDirectory("graft_poison")
+    val dir = suiteTempDir("graft_poison")
     Tables.all.foreach { n =>
       if (n == "events")
         // a parquet whose ts type normalizeTs rejects (string) — the
@@ -63,7 +63,7 @@ class TablesSpec extends SparkSpec {
     // the classic file-source pattern: stream first, data later — the
     // schema comes from the pinned contract fallback, and must agree
     // with what the real file then delivers
-    val dir = Files.createTempDirectory("graft_empty_stream")
+    val dir = suiteTempDir("graft_empty_stream")
     val name = "empty_start_spec"
     val q = graft.streaming.EventPipeline.withStreamPartitions(spark, 2) {
       graft.streaming.EventPipeline.eventsStream(spark, dir.toString)
@@ -83,7 +83,7 @@ class TablesSpec extends SparkSpec {
   }
 
   test("stream ts min/max equals batch ts min/max (schema-drift tripwire)") {
-    val dir = Files.createTempDirectory("graft_ts_parity")
+    val dir = suiteTempDir("graft_ts_parity")
     Files.copy(Paths.get(s"$sf0001/events.parquet"), dir.resolve("events.parquet"))
     val name = "ts_parity_spec"
     val q = graft.streaming.EventPipeline.withStreamPartitions(spark, 2) {

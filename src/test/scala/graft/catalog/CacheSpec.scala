@@ -14,7 +14,7 @@ import graft.{QueryExecutionException, SparkSpec}
 class CacheSpec extends SparkSpec {
 
   private def fixture(): (DataSource, MemoryCache) = {
-    val dir = Files.createTempDirectory("graft_cache")
+    val dir = suiteTempDir("graft_cache")
     val csv = dir.resolve("t.csv")
     Files.writeString(csv, "a,b\n1,x\n2,y\n")
     val cache = new MemoryCache
@@ -45,7 +45,7 @@ class CacheSpec extends SparkSpec {
   }
 
   test("maxsize evicts the least-recently-used entry (test_maxsize)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cache_max")
+    val dir = suiteTempDir("graft_cache_max")
     val cache = new MemoryCache(maxsize = Some(1))
     def table(n: String) = {
       val p = dir.resolve(s"$n.csv")
@@ -63,7 +63,7 @@ class CacheSpec extends SparkSpec {
   }
 
   test("DoNothingCache never memoizes (DoNothingCache parity)") {
-    val dir = Files.createTempDirectory("graft_cache2")
+    val dir = suiteTempDir("graft_cache2")
     val csv = dir.resolve("t.csv")
     Files.writeString(csv, "a\n1\n")
     val ds = new DataSource(spark, dir.toString,
@@ -93,7 +93,7 @@ class CacheSpec extends SparkSpec {
 
   test("statement cache: a repeated join+aggregate reruns only its result " +
     "stage and compiles nothing") {
-    val dir = Files.createTempDirectory("graft_stmt_hit")
+    val dir = suiteTempDir("graft_stmt_hit")
     val ds = new DataSource(spark, dir.toString)
     ds.addTableFromFile(csv(dir, "orders", "o_id,c_id,amt\n1,1,10\n2,1,5\n3,2,7\n4,3,1\n"))
     ds.addTableFromFile(csv(dir, "cust", "c_id,name\n1,ann\n2,bob\n3,cy\n"))
@@ -116,14 +116,14 @@ class CacheSpec extends SparkSpec {
     val df = ds.queryDF(sql)
     assert(ds.queryDF(sql) eq df)
     assert(rows(ds.queryDF(sql)) === Seq(Row(1, "x"), Row(2, "y")))
-    val dir = Files.createTempDirectory("graft_stmt_nothing")
+    val dir = suiteTempDir("graft_stmt_nothing")
     val plain = new DataSource(spark, dir.toString, initialCache = new DoNothingCache)
     plain.addTableFromFile(csv(dir, "t", "a,b\n1,x\n"))
     assert(plain.queryDF(sql) ne plain.queryDF(sql))
   }
 
   test("statement cache: every catalog mutation makes the next identical statement miss") {
-    val dir = Files.createTempDirectory("graft_stmt_mut")
+    val dir = suiteTempDir("graft_stmt_mut")
     val ds = new DataSource(spark, dir.toString)
     val tPath = csv(dir, "t", "a\n1\n2\n")
     ds.addTableFromFile(tPath)
@@ -154,7 +154,7 @@ class CacheSpec extends SparkSpec {
 
   test("statement cache: re-added, dropped and reloaded tables and " +
     "re-registered functions are seen by the next identical statement") {
-    val dir = Files.createTempDirectory("graft_stmt_state")
+    val dir = suiteTempDir("graft_stmt_state")
     val ds = new DataSource(spark, dir.toString)
     ds.addTableFromFile(csv(dir, "t", "a\n1\n2\n"))
     val count = "SELECT count(*) AS n FROM t"
@@ -164,7 +164,7 @@ class CacheSpec extends SparkSpec {
     ds.dropTable("t")
     val e = intercept[QueryExecutionException](ds.queryDF(count))
     assert(e.getMessage === "Unknown table t")
-    val other = Files.createTempDirectory("graft_stmt_other")
+    val other = suiteTempDir("graft_stmt_other")
     ds.addTable(FileTable("t", csv(other, "t", "a\n7\n8\n9\n")))
     assert(rows(ds.queryDF(count)) === Seq(Row(3L)))
     // a re-registered UDF gives its new value
@@ -250,7 +250,7 @@ class CacheSpec extends SparkSpec {
   }
 
   test("statement cache: a maxsize eviction makes the next identical statement miss") {
-    val dir = Files.createTempDirectory("graft_stmt_evict")
+    val dir = suiteTempDir("graft_stmt_evict")
     val ds = new DataSource(spark, dir.toString, initialCache = new MemoryCache(maxsize = Some(1)))
     ds.addTableFromFile(csv(dir, "t1", "a\n1\n2\n"))
     ds.addTableFromFile(csv(dir, "t2", "a\n5\n"))
@@ -266,7 +266,7 @@ class CacheSpec extends SparkSpec {
 
   test("statement cache: 4 threads of mixed hits and misses on one catalog " +
     "give no wrong rows") {
-    val dir = Files.createTempDirectory("graft_stmt_threads")
+    val dir = suiteTempDir("graft_stmt_threads")
     val ds = new DataSource(spark, dir.toString)
     ds.addTableFromFile(csv(dir, "t", "a\n" + (1 to 9).mkString("\n") + "\n"))
     val wrong = new AtomicInteger

@@ -28,7 +28,7 @@ class CatalogIsolationSpec extends SparkSpec {
 
   /** A catalog over one table `t` (a = 1, 1, 2, 3). */
   private def catalog(cache: TableCache = new MemoryCache): DataSource = {
-    val dir = Files.createTempDirectory("graft_iso_fn")
+    val dir = suiteTempDir("graft_iso_fn")
     val ds = new DataSource(spark, dir.toString, initialCache = cache)
     ds.addTableFromFile(csv(dir, "t", "a,b\n1,x\n1,y\n2,z\n3,w\n"))
     ds
@@ -46,7 +46,7 @@ class CatalogIsolationSpec extends SparkSpec {
     * `titanic` (9 rows and 2 rows). */
   private def isolated(newCache: () => TableCache): Unit = {
     val (dirA, dirB) =
-      (Files.createTempDirectory("graft_iso_a"), Files.createTempDirectory("graft_iso_b"))
+      (suiteTempDir("graft_iso_a"), suiteTempDir("graft_iso_b"))
     val nine = csv(dirA, "titanic", "passenger_id\n" + (1 to 9).mkString("\n") + "\n")
     val two = csv(dirB, "titanic", "passenger_id\n100\n101\n")
     val exact = new DataSource(spark, dirA.toString, initialCache = newCache())
@@ -85,7 +85,7 @@ class CatalogIsolationSpec extends SparkSpec {
 
   test("join names keep the qualifiers a temp view gave; a case-sensitive " +
     "catalog reads a mixed-case table by its exact name") {
-    val dir = Files.createTempDirectory("graft_iso_qual")
+    val dir = suiteTempDir("graft_iso_qual")
     val upper = csv(dir, "Titanic", "id,v\n1,2\n")
     val other = csv(dir, "other", "id,w\n1,3\n")
     val any = new DataSource(spark, dir.toString, caseSensitive = false)
@@ -97,7 +97,7 @@ class CatalogIsolationSpec extends SparkSpec {
     ).foreach { sql =>
       assert(any.queryDF(sql).columns.toSeq === Seq("titanic.id", "v", "other.id", "w"), sql)
     }
-    val exact = new DataSource(spark, Files.createTempDirectory("graft_iso_exact").toString)
+    val exact = new DataSource(spark, suiteTempDir("graft_iso_exact").toString)
     Seq(upper, other).foreach(exact.addTableFromFile)
     val df = exact.queryDF("SELECT * FROM Titanic JOIN other ON Titanic.id = other.id")
     assert(df.columns.toSeq === Seq("Titanic.id", "v", "other.id", "w"))

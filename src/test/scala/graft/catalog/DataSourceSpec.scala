@@ -6,7 +6,7 @@ import graft.{QueryExecutionException, SparkSpec}
 
 class DataSourceSpec extends SparkSpec {
 
-  private def tmpDir(): Path = Files.createTempDirectory("graft_test_meta")
+  private def tmpDir(): Path = suiteTempDir("graft_test_meta")
 
   /** 9-row titanic-style CSV fixture (FIXTURES.md §1). */
   private def titanicCsv(dir: Path): String = {

@@ -14,7 +14,7 @@ import graft.api.DfSql.SqlOps
   * over its rows, so later hits run no Spark job. */
 class KeptResultSpec extends SparkSpec {
 
-  private lazy val dir: Path = Files.createTempDirectory("graft_kept")
+  private lazy val dir: Path = suiteTempDir("graft_kept")
 
   /** A MemoryCache catalog over parquet tables with null cells, decimals
     * and timestamps, the shapes of the facade's statements. */

@@ -14,7 +14,7 @@ class IvfIndexSpec extends SparkSpec {
   test("searchIvfIndex equals ivfSearch on the same corpus") {
     val emb = graft.Tables.load(spark, sf0001, "embeddings")
     val queries = emb.filter(col("vec_id") < 7)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_spec").toString
+    val dir = suiteTempDir("ivf_spec").toString
     Similarity.writeIvfIndex(emb, dir)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1),
@@ -41,7 +41,7 @@ class IvfIndexSpec extends SparkSpec {
 
   test("appendIvfIndex leaves the centroid artifact untouched") {
     val emb = graft.Tables.load(spark, sf0001, "embeddings")
-    val dir = java.nio.file.Files.createTempDirectory("ivf_ins_a").toString
+    val dir = suiteTempDir("ivf_ins_a").toString
     Similarity.writeIvfIndex(emb.filter(col("vec_id") >= 100), dir)
     val before = centroidBytes(dir)
     val beforeHash = java.nio.file.Files.walk(java.nio.file.Paths.get(
@@ -58,17 +58,17 @@ class IvfIndexSpec extends SparkSpec {
     val delta = emb.filter(col("vec_id") >= 5 && col("vec_id") < 100)
     val queries = emb.filter(col("vec_id") < 5)
     // arm A: base index + no-retrain append (the s66 object under test)
-    val dirA = java.nio.file.Files.createTempDirectory("ivf_ins_b").toString
+    val dirA = suiteTempDir("ivf_ins_b").toString
     Similarity.writeIvfIndex(base, dirA)
     Similarity.appendIvfIndex(delta, dirA)
     // arm B: postings bulk-written from the UNION in one shot, then the
     // quantizer swapped back to the base-trained artifact — the same
     // logical index reached by a different code path
-    val dirB = java.nio.file.Files.createTempDirectory("ivf_ins_c").toString
+    val dirB = suiteTempDir("ivf_ins_c").toString
     Similarity.writeIvfIndex(emb, dirB)
     val cb = java.nio.file.Paths.get(Similarity.ivfVersionDir(dirB), "centroids")
     org.apache.commons.io.FileUtils.deleteDirectory(cb.toFile)
-    val baseOnly = java.nio.file.Files.createTempDirectory("ivf_ins_d").toString
+    val baseOnly = suiteTempDir("ivf_ins_d").toString
     Similarity.writeIvfIndex(base, baseOnly)
     org.apache.commons.io.FileUtils.copyDirectory(java.nio.file.Paths.get(
       Similarity.ivfVersionDir(baseOnly), "centroids").toFile, cb.toFile)
@@ -85,7 +85,7 @@ class IvfIndexSpec extends SparkSpec {
     val base = emb.filter(col("vec_id") < 5 || col("vec_id") >= 100)
     val delta = emb.filter(col("vec_id") >= 5 && col("vec_id") < 100)
     val queries = emb.filter(col("vec_id") < 5)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_replay").toString
+    val dir = suiteTempDir("ivf_replay").toString
     Similarity.writeIvfIndex(base, dir)
     Similarity.appendIvfIndex(delta, dir, subdir = Some("batch_0"))
     def rows() = Similarity.searchIvfIndex(spark, queries, dir, k = 10)
@@ -105,7 +105,7 @@ class IvfIndexSpec extends SparkSpec {
     val emb = graft.Tables.load(spark, sf0001, "embeddings")
     val base = emb.filter(col("vec_id") >= 100)
     val queries = emb.filter(col("vec_id") < 5)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_compact").toString
+    val dir = suiteTempDir("ivf_compact").toString
     Similarity.writeIvfIndex(base, dir)
     // a few streamed batches fragment the postings
     (0 until 4).foreach { i =>
@@ -137,7 +137,7 @@ class IvfIndexSpec extends SparkSpec {
     import spark.implicits._
     val emb = graft.Tables.load(spark, sf0001, "embeddings")
     val queries = emb.filter(col("vec_id") < 5)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_del").toString
+    val dir = suiteTempDir("ivf_del").toString
     Similarity.writeIvfIndex(emb, dir)
     // plant a near-dup of query 0, then delete it: it must vanish
     val q0 = emb.filter(col("vec_id") === 0).collect()(0)
@@ -170,7 +170,7 @@ class IvfIndexSpec extends SparkSpec {
   test("an inserted near-dup of a query becomes servable at rank 1") {
     import spark.implicits._
     val emb = graft.Tables.load(spark, sf0001, "embeddings")
-    val dir = java.nio.file.Files.createTempDirectory("ivf_ins_e").toString
+    val dir = suiteTempDir("ivf_ins_e").toString
     Similarity.writeIvfIndex(emb, dir)
     val q0 = emb.filter(col("vec_id") === 0)
       .select(col("vec_id"), col("embedding")).collect()(0)
@@ -195,7 +195,7 @@ class IvfIndexSpec extends SparkSpec {
       df.collect().map(r => (r.getLong(0), r.getLong(1),
         r.getDouble(2), r.getInt(3))).toSeq
     // lived-in store: base build + append + tombstoned deletes
-    val dir = java.nio.file.Files.createTempDirectory("ivf_rt_a").toString
+    val dir = suiteTempDir("ivf_rt_a").toString
     Similarity.writeIvfIndex(emb.filter(col("vec_id") >= 50), dir)
     Similarity.appendIvfIndex(emb.filter(col("vec_id") < 50), dir)
     Similarity.deleteFromIvfIndex(
@@ -213,7 +213,7 @@ class IvfIndexSpec extends SparkSpec {
     assert(total.agg(max(col("cell"))).head().getLong(0) > 15L,
       "retrained cells still in the 4-bit range — planes not rebuilt")
     // blue/green result ≡ from-scratch build with the same (nBits, seed)
-    val fresh = java.nio.file.Files.createTempDirectory("ivf_rt_b").toString
+    val fresh = suiteTempDir("ivf_rt_b").toString
     Similarity.writeIvfIndex(live, fresh, nBits = 5, seed = 11L)
     assert(rows(Similarity.searchIvfIndex(spark, queries, dir, k = 10)) ===
       rows(Similarity.searchIvfIndex(spark, queries, fresh, k = 10)),
@@ -222,7 +222,7 @@ class IvfIndexSpec extends SparkSpec {
 
   test("ivfCellBalance: exact histogram, integer ratios, tombstone-aware") {
     val emb = graft.Tables.load(spark, sf0001, "embeddings")
-    val dir = java.nio.file.Files.createTempDirectory("ivf_bal").toString
+    val dir = suiteTempDir("ivf_bal").toString
     Similarity.writeIvfIndex(emb, dir)
     val rows = Similarity.ivfCellBalance(spark, dir).collect()
     val counts = rows.map(_.getLong(1))
@@ -256,7 +256,7 @@ class IvfIndexSpec extends SparkSpec {
     // disk, manifest never flipped — the q224 planted-crash shape. The
     // reader must serve the committed version untouched, and the retry
     // must land on the same version number, overwriting the debris.
-    val cDir = Files.createTempDirectory("ivf_crash_c").toString
+    val cDir = suiteTempDir("ivf_crash_c").toString
     Similarity.writeIvfIndex(emb, cDir)
     val before = rows(cDir)
     val v1 = Similarity.ivfVersionDir(cDir)
@@ -282,7 +282,7 @@ class IvfIndexSpec extends SparkSpec {
     // with `cells`/`centroids` swapped out to `_old` (the ONLY copies)
     // plus rebuild debris — the first maintenance verb must restore it
     // (restoreIfMidSwap) and adopt the store under a manifest.
-    val rDir = Files.createTempDirectory("ivf_crash_r").toString
+    val rDir = suiteTempDir("ivf_crash_r").toString
     Similarity.writeIvfIndex(emb, rDir)
     val rv1 = Similarity.ivfVersionDir(rDir)
     Seq("cells", "centroids").foreach(d =>
@@ -294,7 +294,7 @@ class IvfIndexSpec extends SparkSpec {
       Paths.get(s"$rDir/centroids_old"))
     Files.createDirectories(Paths.get(s"$rDir/retrain_cells"))
     Similarity.retrainIvfIndex(spark, rDir, nBits = 5, seed = 11L)
-    val fresh = Files.createTempDirectory("ivf_crash_f").toString
+    val fresh = suiteTempDir("ivf_crash_f").toString
     Similarity.writeIvfIndex(emb, fresh, nBits = 5, seed = 11L)
     assert(rows(rDir) === rows(fresh),
       "legacy migration + retrain diverged from the from-scratch rebuild")

@@ -9,8 +9,7 @@ class MaintenanceSpec extends SparkSpec {
   import spark.implicits._
 
   test("compactParquet collapses the file count and preserves every row") {
-    val root = Files.createTempDirectory("graft_compact").toFile
-    root.deleteOnExit()
+    val root = suiteTempDir("graft_compact").toFile
     val src = new File(root, "frag").getAbsolutePath
     val dst = new File(root, "compact").getAbsolutePath
     (0L until 1000L).toDF("id").repartition(32)
@@ -73,7 +72,7 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   test("publishVersion: manifest-commit atomicity, crash invisibility, prune safety") {
-    val root = java.nio.file.Files.createTempDirectory("pub_spec").toString
+    val root = suiteTempDir("pub_spec").toString
     val v1 = Seq((1L, "a"), (2L, "b")).toDF("id", "s")
     val v2 = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "s")
     assert(Maintenance.currentVersion(root).isEmpty)
@@ -101,7 +100,7 @@ class MaintenanceSpec extends SparkSpec {
 
   test("commitVersionExclusive: racing writers never share a version, no lost updates") {
     import java.nio.file.{Files, Paths}
-    val root = Files.createTempDirectory("graft_cas").toString + "/store"
+    val root = suiteTempDir("graft_cas").toString + "/store"
     val rounds = 40
     val wins = Array(new java.util.concurrent.atomic.AtomicLong(0),
       new java.util.concurrent.atomic.AtomicLong(0))
@@ -145,7 +144,7 @@ class MaintenanceSpec extends SparkSpec {
 
   test("commitVersionExclusive: stale plan refused; dead claim blocks until broken") {
     import java.nio.file.{Files, Paths}
-    val root = Files.createTempDirectory("graft_cas2").toString + "/store"
+    val root = suiteTempDir("graft_cas2").toString + "/store"
     def commit(base: Option[Long]) =
       graft.operators.Maintenance.commitVersionExclusive(root, base) { dir =>
         Files.createDirectories(Paths.get(dir))

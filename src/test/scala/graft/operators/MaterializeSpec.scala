@@ -49,7 +49,7 @@ class MaterializeSpec extends SparkSpec {
   }
 
   test("reliable checkpoint strategy materializes and survives") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val dir = suiteTempDir("graft-ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
     withStrategy("reliable") {
       val out = Materialize.once(corpus())
@@ -90,7 +90,7 @@ class MaterializeSpec extends SparkSpec {
 
   test("observed metrics read the same under every strategy, and 0 when empty") {
     spark.sparkContext.setCheckpointDir(
-      java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
+      suiteTempDir("graft-ckpt").toString)
     val ids = spark.range(1, 101).toDF("id")
     Materialize.Strategies.foreach { s =>
       withStrategy(s) {

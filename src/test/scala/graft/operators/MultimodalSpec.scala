@@ -38,7 +38,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("fromBinaryFiles ingests real files into the media pipeline") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_media_files")
+    val dir = suiteTempDir("graft_media_files")
     java.nio.file.Files.write(dir.resolve("a.png"),
       Array[Byte](0x50, 0x4e, 0x47, 1, 2, 3))
     java.nio.file.Files.write(dir.resolve("b.WAV"),
@@ -62,7 +62,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("real javax.imageio decode: PNG and JPEG files get true dims, not stub") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_real_images")
+    val dir = suiteTempDir("graft_real_images")
     def write(name: String, fmt: String, w: Int, h: Int): Unit = {
       val img = new java.awt.image.BufferedImage(
         w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)

@@ -207,7 +207,7 @@ class PerceptualHashSpec extends SparkSpec {
 
   test("image store dedup flags corpus near-dups and keeps novel images (m55)") {
     import spark.implicits._
-    val store = java.nio.file.Files.createTempDirectory("m55_spec").toString
+    val store = suiteTempDir("m55_spec").toString
     // corpus: originals 0..99; batch: variants of 0..19 (near-dups of
     // stored images) + originals 1000..1019 (novel — never stored)
     Multimodal.writeImageSignatureStore(

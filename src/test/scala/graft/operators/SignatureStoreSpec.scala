@@ -187,13 +187,71 @@ class SignatureStoreSpec extends SparkSpec {
     }
   }
 
-  test("store path job budget: one dedup + collect at sf0.001 runs 26 jobs") {
+  test("store path job budget: one dedup + collect at sf0.001 runs 25 jobs") {
     withGateStore { (dir, batch) =>
       val (_, jobs, _) = traced {
         Dedup.dedupBatchAgainstStore(spark, batch, dir, 0.5, 20).collect()
       }
-      assert(jobs === 26, s"store-path job count moved: $jobs")
+      assert(jobs === 25, s"store-path job count moved: $jobs")
     }
+  }
+
+  /** `n` distinct words `<prefix>0 … <prefix>(n-1)`, space-joined. */
+  private def words(prefix: String, n: Int): String =
+    (0 until n).map(i => s"$prefix$i").mkString(" ")
+
+  /** Decisions of the store path over a store written from `corpus` and
+    * then appended `appended` (so its df table holds partial rows),
+    * asserted equal to incrementalDedup over corpus ∪ appended ∪ batch.
+    * Returns doc_id → reason. */
+  private def capDecisions(corpus: Seq[(Long, String)], appended: Seq[(Long, String)],
+      batch: Seq[(Long, String)], maxDf: Int): Map[Long, String] = {
+    import spark.implicits._
+    val dir = suiteTempDir("sigstore_dfcap")
+    Dedup.writeSignatureStore(corpus.toDF("doc_id", "text"), dir.toString)
+    if (appended.nonEmpty)
+      Dedup.appendBatchToStore(appended.toDF("doc_id", "text"), dir.toString)
+    def decided(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getBoolean(1), r.getString(2))).toSeq
+    val store = decided(Dedup.dedupBatchAgainstStore(spark,
+      batch.toDF("doc_id", "text"), dir.toString, threshold = 0.5, maxDf = maxDf))
+    val all = (corpus ++ appended ++ batch).toDF("doc_id", "text")
+    val recompute = decided(Dedup.incrementalDedup(all,
+      col("doc_id").isin(batch.map(_._1): _*), threshold = 0.5, maxDf = maxDf))
+    assert(store === recompute, s"store path diverged from recompute at maxDf=$maxDf")
+    store.map(r => r._1 -> r._3).toMap
+  }
+
+  // A pair of identical docs whose 22 shingles are 18 "hot" ones and 4
+  // of their own: with the hot shingles kept their Jaccard is 1, with
+  // them capped away it is 4/40. Each filler doc carries the hot words
+  // and 60 words of its own, so it never pairs with anything.
+  private val hot = words("hot", 20)
+  private val twin = s"$hot ua ub uc ud"
+  private def filler(i: Int) = s"$hot ${words(s"f${i}w", 60)}"
+
+  test("df cap boundary: store partial rows plus batch docs at maxDf keep a " +
+    "shingle; at maxDf + 1 they drop it") {
+    val corpus = Seq((1L, twin), (2L, filler(2)), (3L, filler(3)))
+    val appended = Seq((4L, filler(4)))
+    val batch = Seq((10L, twin), (11L, filler(11)))
+    // hot df: 3 base rows + 1 appended partial row + 2 batch docs = 6
+    val atCap = capDecisions(corpus, appended, batch, maxDf = 6)
+    assert(atCap(10L) === "corpus_dup", "a shingle at exactly maxDf was capped")
+    val overCap = capDecisions(corpus, appended, batch :+ ((12L, filler(12))), maxDf = 6)
+    assert(overCap(10L) === "unique", "a shingle at maxDf + 1 was kept")
+  }
+
+  test("df cap boundary: a batch-only shingle counts once per batch doc") {
+    val corpus = Seq((1L, words("corpus", 30)))
+    // doc 12 holds the hot words twice: per-occurrence counting would
+    // put every hot shingle over the cap
+    val batch = Seq((10L, twin), (11L, twin), (12L, s"$hot $hot ${words("g", 60)}"),
+      (13L, filler(13)))
+    val atCap = capDecisions(corpus, Nil, batch, maxDf = 4)
+    assert(atCap(11L) === "batch_dup", "a batch-only shingle in maxDf docs was capped")
+    val overCap = capDecisions(corpus, Nil, batch :+ ((14L, filler(14))), maxDf = 4)
+    assert(overCap(11L) === "unique", "a batch-only shingle in maxDf + 1 docs was kept")
   }
 
   test("store tables carry the expected schemas") {

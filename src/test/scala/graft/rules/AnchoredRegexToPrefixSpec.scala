@@ -21,7 +21,7 @@ class AnchoredRegexToPrefixSpec extends SparkSpec {
   }
 
   private def ds(): DataSource = {
-    val meta = Files.createTempDirectory("graft_rule_meta")
+    val meta = suiteTempDir("graft_rule_meta")
     val d = new DataSource(spark, meta.toString, initialCache = new DoNothingCache)
     d.addTable(FileTable("customer", "/root/testdata/sf0.001/customer.parquet"))
     d

@@ -21,7 +21,7 @@ import graft.tools.ParityFuzz
 class ParityFuzzSpec extends SparkSpec {
 
   private lazy val ds = {
-    val meta = java.nio.file.Files.createTempDirectory("graft_fuzzspec_meta")
+    val meta = suiteTempDir("graft_fuzzspec_meta")
     val d = new graft.catalog.DataSource(spark, meta.toString,
       initialCache = new graft.catalog.DoNothingCache)
     ParityFuzz.tableNames.foreach { t =>

@@ -56,7 +56,7 @@ class EventPipelineSpec extends SparkSpec {
 
   test("runningLedger streams: memory-sink rows equal the batch ledger") {
     import org.apache.spark.sql.streaming.OutputMode
-    val dir = java.nio.file.Files.createTempDirectory("graft_ledger_stream")
+    val dir = suiteTempDir("graft_ledger_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf0001/events.parquet"),
       dir.resolve("events.parquet"))
@@ -78,7 +78,7 @@ class EventPipelineSpec extends SparkSpec {
   }
 
   test("streaming dedup emits exactly the batch-distinct key set") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sdedup_spec")
+    val dir = suiteTempDir("graft_sdedup_spec")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf0001/events.parquet"),
       dir.resolve("events.parquet"))
@@ -94,7 +94,7 @@ class EventPipelineSpec extends SparkSpec {
   }
 
   test("stream-static enrichment join matches the batch join") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_enrich")
+    val dir = suiteTempDir("graft_enrich")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf0001/events.parquet"),
       dir.resolve("events.parquet"))
@@ -130,7 +130,7 @@ class EventPipelineSpec extends SparkSpec {
   }
 
   test("stream-stream join emits exactly the batch interval-join pairs") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ssj")
+    val dir = suiteTempDir("graft_ssj")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf0001/events.parquet"),
       dir.resolve("events.parquet"))
@@ -148,11 +148,11 @@ class EventPipelineSpec extends SparkSpec {
 
   test("foreachBatch sink round-trip reproduces the batch hourly counts") {
     import org.apache.spark.sql.functions.{col, count, date_trunc, lit, sum}
-    val dir = java.nio.file.Files.createTempDirectory("graft_feb")
+    val dir = suiteTempDir("graft_feb")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf0001/events.parquet"),
       dir.resolve("events.parquet"))
-    val out = java.nio.file.Files.createTempDirectory("graft_feb_out").toString
+    val out = suiteTempDir("graft_feb_out").toString
     val q = EventPipeline.startForeachBatchQuery(spark, dir.toString, out)
     try q.processAllAvailable() finally q.stop()
     val roundTrip = spark.read.parquet(s"$out/batch_*")
@@ -187,7 +187,7 @@ class EventPipelineSpec extends SparkSpec {
       _.getName.endsWith(".parquet")) === 3) // three LSN-ordered batches
     val base = graft.Tables.load(spark, sf0001, "supplier")
       .select(col("s_suppkey").as("id"), col("s_acctbal").cast("double").as("val"))
-    val snapRoot = java.nio.file.Files.createTempDirectory("graft_cdc_snap").toString
+    val snapRoot = suiteTempDir("graft_cdc_snap").toString
     val q = EventPipeline.startCdcUpsertQuery(spark, chunks, snapRoot, base)
     try q.processAllAvailable() finally q.stop()
     val snaps = Option(new java.io.File(snapRoot).listFiles()).get
@@ -212,9 +212,9 @@ class EventPipelineSpec extends SparkSpec {
     import java.nio.file.Files
     val chunks = new java.io.File(EventPipeline.cdcChunksDir(spark, sf0001))
       .listFiles().filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    val dir = Files.createTempDirectory("graft_restart_src").toFile
-    val snapRoot = Files.createTempDirectory("graft_restart_snap").toString
-    val ckpt = Files.createTempDirectory("graft_restart_ckpt").toString
+    val dir = suiteTempDir("graft_restart_src").toFile
+    val snapRoot = suiteTempDir("graft_restart_snap").toString
+    val ckpt = suiteTempDir("graft_restart_ckpt").toString
     val base = graft.Tables.load(spark, sf0001, "supplier")
       .select(col("s_suppkey").as("id"), col("s_acctbal").cast("double").as("val"))
 
@@ -274,11 +274,11 @@ class EventPipelineSpec extends SparkSpec {
 
   test("startForeachBatchQuery purges stale batch_* dirs from earlier runs") {
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft_feb_purge")
+    val dir = suiteTempDir("graft_feb_purge")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf0001/events.parquet"),
       dir.resolve("events.parquet"))
-    val out = java.nio.file.Files.createTempDirectory("graft_feb_purge_out")
+    val out = suiteTempDir("graft_feb_purge_out")
     // simulate a leftover batch from a prior run that produced more
     // batches than this one will (fresh stream restarts numbering at 0)
     spark.range(3).selectExpr("timestamp'2020-01-01' as h",
@@ -295,7 +295,7 @@ class EventPipelineSpec extends SparkSpec {
   }
 
   test("end-to-end streaming: parquet source → watermark window → memory sink") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream")
+    val dir = suiteTempDir("graft_stream")
     // stage the events file into a clean source dir (other tables would
     // confuse the parquet stream source)
     java.nio.file.Files.copy(
@@ -349,7 +349,7 @@ class EventPipelineSpec extends SparkSpec {
     // the q225 contract at spec grain: the streaming session_window
     // state machine, drained over the staged file, must emit exactly
     // the batch sessions whose end clears the final watermark
-    val dir = java.nio.file.Files.createTempDirectory("graft_sess")
+    val dir = suiteTempDir("graft_sess")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf0001/events.parquet"),
       dir.resolve("events.parquet"))

@@ -3,7 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.Dedup
+import graft.operators.{Dedup, Maintenance}
+import graft.queries.Staging
 
 /** Streaming decontam-on-ingest (q158): each micro-batch's flags must
   * equal the batch-mode d54 check of that batch against the same
@@ -22,17 +23,7 @@ class IngestDecontamSpec extends SparkSpec {
     val root = java.nio.file.Files.createTempDirectory("decontam_spec")
     try {
       val in = s"$root/in"
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
-      val t0 = System.currentTimeMillis()
-      Seq(b0, b1).zipWithIndex.foreach { case (cond, i) =>
-        val tmp = java.nio.file.Files.createTempDirectory(s"decontam_b$i")
-        docs.filter(cond).coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = Option(tmp.toFile.listFiles()).getOrElse(Array.empty)
-          .find(_.getName.endsWith(".parquet")).get
-        val dst = java.nio.file.Paths.get(in, s"batch_$i.parquet")
-        java.nio.file.Files.move(part.toPath, dst)
-        dst.toFile.setLastModified(t0 + i * 2000L)
-      }
+      Staging.stageFrames(Seq(b0, b1).map(docs.filter), in)
       val sink = s"$root/sink"
       val q = IngestDecontam.start(spark, in, bench, sink)
       try q.processAllAvailable() finally q.stop()
@@ -55,11 +46,6 @@ class IngestDecontamSpec extends SparkSpec {
         assert(cleanIds === batchIds -- got.map(_._1),
           s"batch-$i clean sink is not batch minus flags")
       }
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(root.toFile)
-    }
+    } finally Maintenance.rmTree(root.toFile)
   }
 }

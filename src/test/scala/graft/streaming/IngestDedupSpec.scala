@@ -3,7 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.Dedup
+import graft.operators.{Dedup, Maintenance}
+import graft.queries.Staging
 
 /** Streaming dedup-on-ingest (q153): the stream must make exactly the
   * decisions the batch store-loop makes — batch 1 sees batch 0's
@@ -22,17 +23,7 @@ class IngestDedupSpec extends SparkSpec {
       val store = s"$root/store"
       Dedup.writeSignatureStore(docs.filter(!day1 && !day2), store)
       val in = s"$root/in"
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
-      val t0 = System.currentTimeMillis()
-      Seq(day1, day2).zipWithIndex.foreach { case (cond, i) =>
-        val tmp = java.nio.file.Files.createTempDirectory(s"ingest_b$i")
-        docs.filter(cond).coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = Option(tmp.toFile.listFiles()).getOrElse(Array.empty)
-          .find(_.getName.endsWith(".parquet")).get
-        val dst = java.nio.file.Paths.get(in, s"batch_$i.parquet")
-        java.nio.file.Files.move(part.toPath, dst)
-        dst.toFile.setLastModified(t0 + i * 2000L)
-      }
+      Staging.stageFrames(Seq(day1, day2).map(docs.filter), in)
       val sink = s"$root/sink"
       val q = IngestDedup.start(spark, in, store, sink,
         threshold = 0.5, maxDf = 20)
@@ -65,12 +56,7 @@ class IngestDedupSpec extends SparkSpec {
       val clean = spark.read.parquet(s"$sink/clean/batch_0")
       assert(clean.count() === got0.count(_._2))
       assert(clean.columns.contains("text"))
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(root.toFile)
-    }
+    } finally Maintenance.rmTree(root.toFile)
   }
 
   test("tagged store append is retry-idempotent") {
@@ -94,11 +80,6 @@ class IngestDedupSpec extends SparkSpec {
         .parquet(s"$dir/signatures").count()
       assert(once === 3L && twice === 3L,
         s"tagged append double-counted on retry: $once -> $twice")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir.toFile)
-    }
+    } finally Maintenance.rmTree(dir.toFile)
   }
 }

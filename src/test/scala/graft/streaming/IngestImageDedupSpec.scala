@@ -3,7 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.Multimodal
+import graft.operators.{Maintenance, Multimodal}
+import graft.queries.Staging
 
 /** Streaming image dedup-on-ingest (q154): the loop property that the
   * gate oracle also replays — batch 1's near-dups of batch 0's NOVEL
@@ -20,23 +21,12 @@ class IngestImageDedupSpec extends SparkSpec {
       Multimodal.writeImageSignatureStore(
         spark, (0L until 60L).toDF("doc_id"), store)
       val in = s"$root/in"
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
-      val t0 = System.currentTimeMillis()
       val batches = Seq(
         // day 0: near-dups of stored images + novel images 60..79
         (0L until 20L).map((_, true)) ++ (60L until 80L).map((_, false)),
         // day 1: near-dups of day-0's NOVEL images + novel 80..99
         (60L until 80L).map((_, true)) ++ (80L until 100L).map((_, false)))
-      batches.zipWithIndex.foreach { case (b, i) =>
-        val tmp = java.nio.file.Files.createTempDirectory(s"img_ingest_b$i")
-        b.toDF("doc_id", "variant").coalesce(1)
-          .write.mode("overwrite").parquet(tmp.toString)
-        val part = Option(tmp.toFile.listFiles()).getOrElse(Array.empty)
-          .find(_.getName.endsWith(".parquet")).get
-        val dst = java.nio.file.Paths.get(in, s"batch_$i.parquet")
-        java.nio.file.Files.move(part.toPath, dst)
-        dst.toFile.setLastModified(t0 + i * 2000L)
-      }
+      Staging.stageFrames(batches.map(_.toDF("doc_id", "variant")), in)
       val sink = s"$root/sink"
       val q = IngestImageDedup.start(spark, in, store, sink)
       try q.processAllAvailable() finally q.stop()
@@ -56,11 +46,6 @@ class IngestImageDedupSpec extends SparkSpec {
         d1(id + Multimodal.VariantOffset) == "corpus_dup") >= 18,
         s"day-1 dups of appended keepers not flagged: $d1")
       (80L until 100L).foreach(id => assert(d1(id) === "unique"))
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(root.toFile)
-    }
+    } finally Maintenance.rmTree(root.toFile)
   }
 }

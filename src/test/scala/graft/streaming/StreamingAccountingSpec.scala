@@ -3,7 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.Sampling
+import graft.operators.{Maintenance, Sampling}
+import graft.queries.Staging
 
 /** Streaming HT accountant (q223): the summed partial tallies from N
   * micro-batches must equal the single-pass batch accounting over the
@@ -20,18 +21,8 @@ class StreamingAccountingSpec extends SparkSpec {
     val root = java.nio.file.Files.createTempDirectory("streamacct_spec")
     try {
       val in = s"$root/in"
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
-      val t0 = System.currentTimeMillis()
-      (0 until 3).foreach { i =>
-        val tmp = java.nio.file.Files.createTempDirectory(s"streamacct_b$i")
-        docs.filter(pmod(col("doc_id"), lit(3L)) === i)
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = Option(tmp.toFile.listFiles()).getOrElse(Array.empty)
-          .find(_.getName.endsWith(".parquet")).get
-        val dst = java.nio.file.Paths.get(in, s"chunk_$i.parquet")
-        java.nio.file.Files.move(part.toPath, dst)
-        dst.toFile.setLastModified(t0 + i * 2000L)
-      }
+      Staging.stageFrames((0 until 3).map(i =>
+        docs.filter(pmod(col("doc_id"), lit(3L)) === i)), in)
       val store = s"$root/tallies"
       val q = StreamingAccounting.start(spark, in, store)
       try q.processAllAvailable() finally q.stop()
@@ -55,11 +46,6 @@ class StreamingAccountingSpec extends SparkSpec {
         .write.mode("overwrite").parquet(s"$store/batch_0")
       val replayed = rows(StreamingAccounting.reportFromStore(spark, store))
       assert(replayed === streamed, "batch replay changed the report")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(root.toFile)
-    }
+    } finally Maintenance.rmTree(root.toFile)
   }
 }

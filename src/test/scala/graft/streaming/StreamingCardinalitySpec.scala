@@ -3,7 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.Frequency
+import graft.operators.{Frequency, Maintenance}
+import graft.queries.Staging
 
 /** Streaming cardinality monitor (q161): the max-merged partial
   * sketches from N micro-batches must equal the single-pass batch
@@ -19,18 +20,9 @@ class StreamingCardinalitySpec extends SparkSpec {
     val root = java.nio.file.Files.createTempDirectory("streamcard_spec")
     try {
       val in = s"$root/in"
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
-      val t0 = System.currentTimeMillis()
-      (0 until 3).foreach { i => // three chunks → three micro-batches
-        val tmp = java.nio.file.Files.createTempDirectory(s"streamcard_b$i")
-        ev.filter(pmod(col("event_id"), lit(3L)) === i)
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = Option(tmp.toFile.listFiles()).getOrElse(Array.empty)
-          .find(_.getName.endsWith(".parquet")).get
-        val dst = java.nio.file.Paths.get(in, s"chunk_$i.parquet")
-        java.nio.file.Files.move(part.toPath, dst)
-        dst.toFile.setLastModified(t0 + i * 2000L)
-      }
+      // three chunks → three micro-batches
+      Staging.stageFrames((0 until 3).map(i =>
+        ev.filter(pmod(col("event_id"), lit(3L)) === i)), in)
       val store = s"$root/regs"
       val q = StreamingCardinality.start(spark, in, store)
       try q.processAllAvailable() finally q.stop()
@@ -67,11 +59,6 @@ class StreamingCardinalitySpec extends SparkSpec {
         .collect()
       assert(est.nonEmpty)
       assert(est.forall(_.getLong(1) === Frequency.HllBuckets.toLong))
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(root.toFile)
-    }
+    } finally Maintenance.rmTree(root.toFile)
   }
 }

@@ -92,7 +92,7 @@ class PlanPropertiesSpec extends SparkSpec {
   }
 
   test("partitioned write → partition-pruned read") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val dir = suiteTempDir("graft_part").toString
     graft.Tables.load(spark, sf0001, "events")
       .write.partitionBy("event_type").mode("overwrite").parquet(dir)
     val df = spark.read.parquet(dir).filter(col("event_type") === "purchase")
@@ -108,7 +108,7 @@ class PlanPropertiesSpec extends SparkSpec {
     // dim attribute), and DPP injects the dim's surviving keys as a
     // runtime partition filter — the fact scan reads one partition
     // instead of all of them
-    val dir = java.nio.file.Files.createTempDirectory("graft_dpp").toString
+    val dir = suiteTempDir("graft_dpp").toString
     graft.Tables.load(spark, sf0001, "events")
       .write.partitionBy("event_type").mode("overwrite").parquet(dir)
     import spark.implicits._
@@ -118,7 +118,7 @@ class PlanPropertiesSpec extends SparkSpec {
     // ...and the predicate must be one the optimizer's isLikelySelective
     // recognizes (EqualTo/In/Like on an attribute) — a bare boolean
     // column reference is not counted as selective and DPP stays off
-    val dimDir = java.nio.file.Files.createTempDirectory("graft_dppd").toString
+    val dimDir = suiteTempDir("graft_dppd").toString
     Seq(("purchase", "gold"), ("click", "base"), ("view", "base"),
       ("signup", "base")).toDF("etype", "tier")
       .write.mode("overwrite").parquet(dimDir)
@@ -179,7 +179,7 @@ class PlanPropertiesSpec extends SparkSpec {
   }
 
   test("facade queries keep parquet pushdown through temp views") {
-    val meta = java.nio.file.Files.createTempDirectory("graft_plan_meta")
+    val meta = suiteTempDir("graft_plan_meta")
     val ds = new graft.catalog.DataSource(spark, meta.toString,
       initialCache = new graft.catalog.DoNothingCache)
     ds.addTable(graft.catalog.FileTable("lineitem", s"$sf0001/lineitem.parquet"))

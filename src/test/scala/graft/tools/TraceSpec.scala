@@ -12,7 +12,7 @@ class TraceSpec extends SparkSpec {
   test("Trace times n samples, writes the final plan and keeps prior persists") {
     val kept = spark.sparkContext.parallelize(1 to 10).persist(StorageLevel.MEMORY_ONLY)
     kept.count()
-    val dir = Files.createTempDirectory("graft-trace").toString
+    val dir = suiteTempDir("graft-trace").toString
     try {
       val Seq(r) = Trace.run(spark, Seq("q01_projection"), sf0001, n = 2, Some(dir))
       assert(r.samples.size == 2 && r.samples.forall(_ > 0))
